@@ -30,10 +30,6 @@ object Sessions {
       // number — this is a deployment knob, not engine logic.)
       .config("spark.sql.files.openCostInBytes",
         sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "65536"))
-      // dedup-intermediate persist policy (auto | true | false) — env
-      // mirror for A/B measurement, same knob as spark.graft.dedup.persist
-      .config("spark.graft.dedup.persist",
-        sys.env.getOrElse("SPARK_GRAFT_DEDUP_PERSIST", "auto"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)

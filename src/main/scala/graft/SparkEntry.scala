@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Tokenize
-import graft.queries.{Analytics, Geo, Graphs, LlmOps, LlmDedup, LlmSim, LlmMedia, RelTpch, RelGraph, RelStats, RelEvents, Metrics, Reference, Relational, Retrieval, Strings, Wave7, Wave8, Wave9, Wave10, Wave11, Wave12, Wave13, Wave14, Wave15, Wave16, Wave17, Wave18, Wave19, Wave20, Wave21, Wave22, Wave23, Wave24, Wave25, Wave26, Wave27, Wave28, Wave29, Wave30, Wave31, Wave32, Wave33, Wave34, Wave35, Wave36, Wave37, Wave38, Wave39, Wave40, Wave41, Wave42, Wave43, Wave44, Wave45, Wave46, Wave47, Wave48, Wave49, Wave50, Wave51, Wave52, Wave53, Wave54, Wave55, Wave56, Wave57, Wave58, Wave59, Wave60, Wave61, Wave62, Wave63, Wave64, Wave65, Wave66, Wave67}
+import graft.queries._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,19 +24,24 @@ object SparkEntry {
     Tokenize.wordCount(docs, "text").orderBy(desc("cnt"), asc("word")).limit(20)
   }
 
-  /** One entry per implemented operator from SURVEY.md §2 (+ §7 additions). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Reference.queries ++ Relational.queries ++ RelTpch.queries ++
-      RelGraph.queries ++ RelStats.queries ++ RelEvents.queries ++ LlmOps.queries ++
-      LlmDedup.queries ++ LlmSim.queries ++ LlmMedia.queries ++
-      Analytics.queries ++ Retrieval.queries ++ Geo.queries ++ Graphs.queries ++
-      Metrics.queries ++ Strings.queries ++ Wave7.queries ++ Wave8.queries ++ Wave9.queries ++ Wave10.queries ++ Wave11.queries ++ Wave12.queries ++ Wave13.queries ++ Wave14.queries ++ Wave15.queries ++ Wave16.queries ++ Wave17.queries ++ Wave18.queries ++ Wave19.queries ++ Wave20.queries ++ Wave21.queries ++ Wave22.queries ++ Wave23.queries ++ Wave24.queries ++ Wave25.queries ++ Wave26.queries ++ Wave27.queries ++ Wave28.queries ++ Wave29.queries ++ Wave30.queries ++ Wave31.queries ++ Wave32.queries ++ Wave33.queries ++ Wave34.queries ++ Wave35.queries ++ Wave36.queries ++ Wave37.queries ++ Wave38.queries ++ Wave39.queries ++ Wave40.queries ++ Wave41.queries ++ Wave42.queries ++ Wave43.queries ++ Wave44.queries ++ Wave45.queries ++ Wave46.queries ++ Wave47.queries ++ Wave48.queries ++ Wave49.queries ++ Wave50.queries ++ Wave51.queries ++ Wave52.queries ++ Wave53.queries ++ Wave54.queries ++ Wave55.queries ++ Wave56.queries ++ Wave57.queries ++ Wave58.queries ++ Wave59.queries ++ Wave60.queries ++ Wave61.queries ++ Wave62.queries ++ Wave63.queries ++ Wave64.queries ++ Wave65.queries ++ Wave66.queries ++ Wave67.queries
+  /** Every per-file catalog, in merge order. */
+  lazy val catalogs: Seq[Catalog] = Seq(
+    Reference, Relational, RelTpch, RelGraph, RelStats, RelEvents, LlmOps,
+    LlmDedup, LlmSim, LlmMedia, Analytics, Retrieval, Geo, Graphs, Metrics,
+    Strings, Wave7, Wave8, Wave9, Wave10, Wave11, Wave12, Wave13, Wave14,
+    Wave15, Wave16, Wave17, Wave18, Wave19, Wave20, Wave21, Wave22, Wave23,
+    Wave24, Wave25, Wave26, Wave27, Wave28, Wave29, Wave30, Wave31, Wave32,
+    Wave33, Wave34, Wave35, Wave36, Wave37, Wave38, Wave39, Wave40, Wave41,
+    Wave42, Wave43, Wave44, Wave45, Wave46, Wave47, Wave48, Wave49, Wave50,
+    Wave51, Wave52, Wave53, Wave54, Wave55, Wave56, Wave57, Wave58, Wave59,
+    Wave60, Wave61, Wave62, Wave63, Wave64, Wave65, Wave66, Wave67)
+
+  /** One entry per implemented operator from SURVEY.md §2 (+ §7 additions).
+    * A key defined in two catalogs fails here, at construction. */
+  lazy val queries: Map[String, Q] =
+    strictMap(catalogs.flatMap(_.queries): _*)
 
   /** DuckDB-runnable oracle twin for every query (same column names). */
-  def oracleSql: Map[String, String] =
-    Reference.oracle ++ Relational.oracle ++ RelTpch.oracle ++
-      RelGraph.oracle ++ RelStats.oracle ++ RelEvents.oracle ++ LlmOps.oracle ++
-      LlmDedup.oracle ++ LlmSim.oracle ++ LlmMedia.oracle ++
-      Analytics.oracle ++ Retrieval.oracle ++ Geo.oracle ++ Graphs.oracle ++
-      Metrics.oracle ++ Strings.oracle ++ Wave7.oracle ++ Wave8.oracle ++ Wave9.oracle ++ Wave10.oracle ++ Wave11.oracle ++ Wave12.oracle ++ Wave13.oracle ++ Wave14.oracle ++ Wave15.oracle ++ Wave16.oracle ++ Wave17.oracle ++ Wave18.oracle ++ Wave19.oracle ++ Wave20.oracle ++ Wave21.oracle ++ Wave22.oracle ++ Wave23.oracle ++ Wave24.oracle ++ Wave25.oracle ++ Wave26.oracle ++ Wave27.oracle ++ Wave28.oracle ++ Wave29.oracle ++ Wave30.oracle ++ Wave31.oracle ++ Wave32.oracle ++ Wave33.oracle ++ Wave34.oracle ++ Wave35.oracle ++ Wave36.oracle ++ Wave37.oracle ++ Wave38.oracle ++ Wave39.oracle ++ Wave40.oracle ++ Wave41.oracle ++ Wave42.oracle ++ Wave43.oracle ++ Wave44.oracle ++ Wave45.oracle ++ Wave46.oracle ++ Wave47.oracle ++ Wave48.oracle ++ Wave49.oracle ++ Wave50.oracle ++ Wave51.oracle ++ Wave52.oracle ++ Wave53.oracle ++ Wave54.oracle ++ Wave55.oracle ++ Wave56.oracle ++ Wave57.oracle ++ Wave58.oracle ++ Wave59.oracle ++ Wave60.oracle ++ Wave61.oracle ++ Wave62.oracle ++ Wave63.oracle ++ Wave64.oracle ++ Wave65.oracle ++ Wave66.oracle ++ Wave67.oracle
+  lazy val oracleSql: Map[String, String] =
+    strictMap(catalogs.flatMap(_.oracle): _*)
 }

@@ -29,7 +29,7 @@ import graft.operators.Ckpt._
   * regardless of k. Exact all-pairs betweenness is O(V·E) and belongs to
   * sampling estimators (Riondato-Kornaropoulos), not this operator.
   *
-  * EXECUTION SHAPE (round-12 rework; r11's JobBreakdown showed the wall
+  * EXECUTION SHAPE (round-12 rework; r11's per-job breakdown showed the wall
   * was the per-round σ-aggregation shuffles — 37 MB + 63 MB at sf0.1 —
   * not the expansion joins, and every action-fusion/noAqe/pin variant
   * measured neutral-or-worse):
@@ -57,6 +57,9 @@ import graft.operators.Ckpt._
   */
 object Betweenness {
 
+  /** Measured edge-block bytes above which the broadcast hints drop. */
+  private val BroadcastMaxEdgeBytes = 1L << 30
+
   /** @param edges (src, dst) BIGINT pairs, both directions for undirected.
     * @param seeds (seed) — the bounded source set.
     * @param depth forward rounds (shortest-path DAG truncated at this
@@ -78,8 +81,6 @@ object Betweenness {
     // restores full parallelism when the caller's edge list arrives
     // AQE-coalesced to a handful of partitions (r11 finding: an 8-wide
     // σ-expansion on a 32-core box).
-    val nPart = edges0.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt
     val sc = edges0.sparkSession.sparkContext
     def label[T](l: String)(body: => T): T = {
       val prev = sc.getLocalProperty("spark.job.description")
@@ -87,8 +88,7 @@ object Betweenness {
       try body finally sc.setJobDescription(prev)
     }
     val edges = label("edges ckpt") {
-      edges0.select(col("src"), col("dst"))
-        .repartition(nPart, col("dst")).ckpt()
+      spreadBy(edges0.select(col("src"), col("dst")), col("dst")).ckpt()
     }
     // Broadcast-hint gate (the PageRank broadcastMaxVerts discipline):
     // frontier/settled/δ frames are ball-sized by the seed contract, but
@@ -100,11 +100,8 @@ object Betweenness {
     // fixed-cost barriers this operator is budgeted by. ~1 GiB of edge
     // blocks ≈ 50 M+ edges: well past the point where a ball could
     // plausibly stay broadcast-sized.
-    val maxBytes = edges0.sparkSession.conf
-      .getOption("graft.betweenness.broadcastMaxEdgeBytes")
-      .map(_.toLong).getOrElse(1L << 30)
-    val useBroadcast =
-      edges.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(maxBytes)
+    val useBroadcast = edges.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      BigInt(BroadcastMaxEdgeBytes)
     def hint(df: DataFrame): DataFrame =
       if (useBroadcast) broadcast(df) else df
     // level 0 — the seeds themselves; σ(seed, seed) = 1. Eager ckpt: it

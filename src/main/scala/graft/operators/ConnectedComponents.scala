@@ -88,7 +88,7 @@ object ConnectedComponents {
       // canonicalize equal and every round paid FIVE broadcast-collect
       // jobs; emitted together, all three joins below build the identical
       // [v, l] broadcast and ReuseExchange collapses them into ONE
-      // (DevProfile: q_dbscan 59 → 35 jobs, SCALE.md round-10 table).
+      // (job profile: q_dbscan 59 → 35 jobs, SCALE.md round-10 table).
       val withBoth = sym.join(cur, col("b") === col("v"))
         .select(col("a"), col("l").as("lb"))
         .join(cur, col("a") === col("v"))

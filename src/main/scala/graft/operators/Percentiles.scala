@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   *     Spark's own interpolation formula `(1-frac)·lo + frac·hi`.
   *
   * Every join is an equi join on (key[, rank]); the rank/offset metadata
-  * sides join under the `graft.ranks.offsetsBroadcast` policy (default:
-  * AQE sizes them at runtime — see [[Ranks]]' high-cardinality guard).
+  * sides carry no broadcast hint — AQE sizes them at runtime (see
+  * [[Ranks]]' high-cardinality guard).
   */
 object Percentiles {
 
@@ -56,7 +56,7 @@ object Percentiles {
     val ranked = ranked0.select(col("__k"), col("rk").as("__rk"), col("__v"))
     // |keys|·|ps|·2 rows — tiny for low-cardinality keys, but subject to
     // the same high-cardinality guard as the rank offsets (Ranks scaladoc)
-    val vals = ranked.join(Ranks.maybeBroadcast(need), Seq("__k", "__rk"))
+    val vals = ranked.join(need, Seq("__k", "__rk"))
     targets
       .join(vals.select(col("__k"), col("__rk").as("__lo"), col("__v").as("__vlo")),
         Seq("__k", "__lo"))
@@ -135,9 +135,9 @@ object Percentiles {
       .withColumn("__t", greatest(lit(1L),
         ceil(col("__p").cast(DecimalType(38, 18)) * col("__tw")).cast("long")))
       .select("__k", "__p", "__t")
-    withCum.join(Ranks.maybeBroadcast(offs), Seq("__pid", "__k"))
+    withCum.join(offs, Seq("__pid", "__k"))
       .withColumn("__cw", col("__off") + col("__cuml"))
-      .join(Ranks.maybeBroadcast(thresholds), Seq("__k"))
+      .join(thresholds, Seq("__k"))
       .where(col("__cw") >= col("__t"))
       .groupBy("__k", "__p")
       .agg(min(struct(col("__cw"), col("__v"))).as("__m"))

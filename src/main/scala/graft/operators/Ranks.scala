@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * (its count job reads the one shuffle's output; map stages are skipped
   * on reuse); within-key rank = global index − min index of the key + 1,
   * where the per-key min-index table (|keys| rows — metadata) joins back
-  * under the broadcast policy below.
+  * under the high-cardinality guard below.
   *
   * == Why one RDD lineage, not two DataFrame branches ==
   * The previous shape derived chunk offsets from `spark_partition_id()`
@@ -33,24 +33,15 @@ import org.apache.spark.sql.functions._
   * current callers (percentile keys, languages, cluster ids) that is tiny
   * and a broadcast join is ideal — but as a GENERAL primitive a
   * high-cardinality key would make a forced broadcast an executor/driver
-  * memory bomb. `graft.ranks.offsetsBroadcast` picks the join strategy:
-  *
-  *  - `auto` (default): NO static hint — AQE measures the offsets
-  *    aggregate at runtime and broadcasts iff it fits
-  *    `spark.sql.adaptive.autoBroadcastJoinThreshold`; past that it falls
-  *    back to a shuffled join. The fallback is cheap by construction: the
-  *    data side is ALREADY hash-partitioned and sorted by (pid, key) for
-  *    the chunk-local window, so only the offsets (metadata) side gets a
-  *    new Exchange.
-  *  - `force`: always hint `broadcast(offs)` (the pre-round-5 behavior —
-  *    for callers that KNOW the key is low-cardinality and want the plan
-  *    pinned without AQE stats).
-  *  - `off`: force a non-broadcast join (`merge` hint) — for tests and
-  *    for deployments where the offsets side is known-huge.
+  * memory bomb. So the offsets join carries NO static hint: AQE measures
+  * the offsets aggregate at runtime and broadcasts iff it fits
+  * `spark.sql.adaptive.autoBroadcastJoinThreshold`; past that it falls
+  * back to a shuffled join. The fallback is cheap by construction: the
+  * data side is ALREADY hash-partitioned and sorted by (pid, key) for the
+  * chunk-local window, so only the offsets (metadata) side gets a new
+  * Exchange.
   */
 object Ranks {
-
-  val OffsetsBroadcastConf = "graft.ranks.offsetsBroadcast"
 
   /** Adds a 1-based `rk` column: the rank of each row within its
     * `keyCol` group under the total order `orderCols` (pass a unique
@@ -72,17 +63,8 @@ object Ranks {
       sorted.schema.add("__gidx", org.apache.spark.sql.types.LongType,
         nullable = false))
     val firsts = indexed.groupBy(keyCol).agg(min("__gidx").as("__first"))
-    indexed.join(maybeBroadcast(firsts), Seq(keyCol))
+    indexed.join(firsts, Seq(keyCol))
       .withColumn("rk", col("__gidx") - col("__first") + 1)
       .drop("__gidx", "__first")
   }
-
-  /** Apply the [[OffsetsBroadcastConf]] policy to a small-by-construction
-    * metadata side of a join (shared with [[Percentiles]]'s rank list). */
-  private[operators] def maybeBroadcast(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get(OffsetsBroadcastConf, "auto") match {
-      case "force" => broadcast(df)
-      case "off"   => df.hint("merge")
-      case _       => df // AQE sizes the aggregate at runtime
-    }
 }

@@ -40,7 +40,7 @@ import graft.operators.Ckpt._
   *
   * FIXED-COST DISCIPLINE (round-10): under AQE every exchange materializes
   * as its own job, and this operator's wall time on the harness graph was
-  * ~50% BETWEEN jobs (153 jobs, DevProfile) — so (a) the trim round is ONE
+  * ~50% BETWEEN jobs (153 jobs, job profile) — so (a) the trim round is ONE
   * union+groupBy shuffle instead of two distincts + a join + an anti-join
   * (in/out degree flags and settled-singleton detection ride the same
   * aggregation), and (b) every convergence/settle count is a narrow

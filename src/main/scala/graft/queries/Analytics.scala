@@ -16,7 +16,7 @@ import graft.operators.Ckpt._
   * graph, here weighted by min shipped quantity) and the co-purchase part
   * graph (q_freq_pairs' basket-capped, support-thresholded edges).
   */
-object Analytics {
+object Analytics extends Catalog {
 
   type Q = (SparkSession, String) => DataFrame
 

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * z-ordered layout, `q_zorder`), the station side explodes ×9 and
   * broadcasts.
   */
-object Geo {
+object Geo extends Catalog {
 
   type Q = (SparkSession, String) => DataFrame
 

@@ -18,7 +18,7 @@ import graft.operators.Ckpt._
   * integers with BIGINT harmonic sums (the q_sketch_hll machinery), so both
   * are partition- and engine-invariant.
   */
-object Graphs {
+object Graphs extends Catalog {
 
   type Q = (SparkSession, String) => DataFrame
 

@@ -15,7 +15,7 @@ import graft.operators.Ckpt._
   * wholesale below) — see its scaladoc for the md5-derived hash family
   * and integer-quantization rules these queries build on.
   */
-object LlmDedup {
+object LlmDedup extends Catalog {
   import LlmOps._
 
   val queries: Map[String, Q] = strictMap(
@@ -265,13 +265,13 @@ object LlmDedup {
       // sides — EAGER ckpt, not lazy persist: the consumers materialize
       // concurrently under the single terminal action and race a lazy
       // cache, each recomputing the tokenize+explode+distinct pipeline
-      // (JobBreakdown r12: two duplicate ~0.9 s jobs). One materialization,
+      // (r12 per-job breakdown: two duplicate ~0.9 s jobs). One materialization,
       // blocks re-read by every consumer (the prefixTruePairs discipline).
       // SIZE-GATED (r12 verdict task 2): tri is a corpus-amplified explode
       // output — past the gate it degrades to a lazy spillable persist
       // that keeps lineage instead of pinning ~100× the corpus text in
       // executor storage with no recompute path.
-      val tri = LlmOps.ckptIfSmall(ws.select(col("doc_id"), col("source"),
+      val tri = ckptIfSmall(ws.select(col("doc_id"), col("source"),
         explode(expr(
           "transform(sequence(1, size(ws)-2), i -> concat_ws(' ', element_at(ws,i), element_at(ws,i+1), element_at(ws,i+2)))"))
           .as("sh"))

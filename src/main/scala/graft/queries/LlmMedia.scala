@@ -14,7 +14,7 @@ import graft.operators.Ckpt._
   * ([[LlmOps.mediaTable]]) and the determinism contract live in
   * [[LlmOps]].
   */
-object LlmMedia {
+object LlmMedia extends Catalog {
   import LlmOps._
 
   val queries: Map[String, Q] = strictMap(
@@ -133,7 +133,7 @@ object LlmMedia {
       val ntok = toks(s, dir).groupBy("doc_id").agg(count(lit(1)).as("n_tok"))
       // kept embeds the whole dedup chain and has TWO consumers (the
       // per-lang counts and the mixing rank). Unlike the narrow codegen'd
-      // shingle pipelines the `maybePersist` auto policy was measured on
+      // shingle pipelines the `maybePersist` size gate was measured on
       // (recompute wins locally), kept's upstream is WIDE — shuffled LSH
       // band joins + Jaccard verify — so re-execution is never cheap:
       // persisting wins at every scale (measured 11.2 → 9.9 s at sf0.1).

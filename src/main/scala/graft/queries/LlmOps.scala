@@ -33,7 +33,7 @@ import graft.operators.Ckpt._
   * `label` / `source`) and sampled, and exist as correctness baselines for
   * the LSH/IVF variants.
   */
-object LlmOps {
+object LlmOps extends Catalog {
   import Tokenize.Delim
 
   // ---- minhash / shingle constants (shared Spark + SQL) ----
@@ -82,51 +82,6 @@ object LlmOps {
       recs.write.mode("overwrite").parquet(base)
     }
     s.read.parquet(base)
-  }
-
-  /** Persist break-even for multi-consumer dedup intermediates, on the
-    * optimizer's size estimate of the intermediate: below it, recomputing
-    * the narrow codegen'd pipeline 2-3× beats materialization (measured at
-    * sf0.1: the minhash trio runs 13.2 s recomputed vs 21.7 s persisted —
-    * SCALE.md "Persist points"); above it the corpus scan dominates and
-    * reuse wins. */
-  private[queries] val PersistAutoBytes = BigInt(256L * 1024 * 1024)
-
-  /** Cache a multi-consumer dedup intermediate (bands / shingle sets /
-    * trigram incidence), governed by `spark.graft.dedup.persist`:
-    * `auto` (default) persists when the plan's estimated size exceeds
-    * [[PersistAutoBytes]]; `true`/`false` force it. Callers run inside
-    * Bench/Verify, which clearCache() per query. */
-  private[queries] def maybePersist(df: DataFrame): DataFrame = {
-    val mode = df.sparkSession.conf.get("spark.graft.dedup.persist", "auto")
-    val on = mode match {
-      case "auto" =>
-        df.queryExecution.optimizedPlan.stats.sizeInBytes > PersistAutoBytes
-      case v => v.toBoolean
-    }
-    if (on) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else df
-  }
-
-  /** Eager ckpt for CORPUS-AMPLIFIED multi-consumer intermediates
-    * (shingle/trigram incidence tables — explode outputs ~100× the corpus
-    * text), SIZE-GATED like [[widenIfSmall]]: below the gate (all of
-    * local/harness scale) the frame is eagerly localCheckpointed — one
-    * materialization, every concurrent consumer reads blocks, no
-    * duplicate-build race (the r12 JobBreakdown finding). Past the gate
-    * (cluster-scale corpora) eager materialization of an exploded table
-    * into executor memory with TRUNCATED lineage is itself the failure
-    * mode (executor loss = job failure, guide §5) — degrade to a lazy
-    * spillable persist that keeps lineage, accepting the possible
-    * duplicate build as the cheaper risk. Post-agg narrow frames
-    * (|docs|-row score/band tables) don't need the gate and call
-    * `.ckpt()` directly. */
-  private[queries] def ckptIfSmall(df: DataFrame): DataFrame = {
-    import graft.operators.Ckpt._
-    val nPart = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est < BigInt(nPart) * 64L * 1024 * 1024) df.ckpt()
-    else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   // ---- language-ID stopword lists (tiny n-gram-free heuristic) ----
@@ -408,27 +363,6 @@ object LlmOps {
   private[queries] def repDocs(s: SparkSession, dir: String): DataFrame =
     widenIfSmall(repsOf(docs(s, dir)))
 
-  /** Restore machine-width parallelism under a compute-AMPLIFYING stage
-    * (shingle explode + per-shingle md5) whose input arrives through an
-    * exchange AQE coalesces by BYTES: the rep corpus at harness scale is
-    * a few MB of shuffle output, so AQE folds it to one partition and the
-    * downstream signature build runs single-task (JobBreakdown r12: a
-    * 1.2 s one-task job = half of q_dedup_minhash's wall). The fix is the
-    * Betweenness edge-list discipline — an explicit conf-driven
-    * repartition — but SIZE-GATED like its broadcast hints: past the gate
-    * (cluster-scale inputs, where the exchange is already wide and an
-    * extra corpus-text shuffle would be pure cost) this is the identity.
-    * Gate = shuffle width × the 64 MB AQE advisory size: below it,
-    * size-based coalescing can starve an amplifying stage; above it AQE
-    * keeps ≥ width partitions on its own. */
-  private[queries] def widenIfSmall(df: DataFrame): DataFrame = {
-    val nPart = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est < BigInt(nPart) * 64L * 1024 * 1024)
-      df.repartition(nPart, col("doc_id"))
-    else df
-  }
-
   /** w-bit simhash per doc: majority vote per bit over md5-derived token
     * hashes. One narrow aggregation — linear at any corpus size; the
     * shuffle carries w partial sums per (doc, partition). `w` ≤ 32 (bits
@@ -571,7 +505,7 @@ object LlmOps {
     * under AQE those consumers materialize as CONCURRENT broadcast-build
     * jobs that race a lazy cache and each recompute the whole signature
     * pipeline (shingle explode + md5 per shingle + 16-way min-agg) —
-    * JobBreakdown r12: two duplicate ~1.3 s build jobs, the dominant cost
+    * r12 per-job breakdown: two duplicate ~1.3 s build jobs, the dominant cost
     * of q_dedup_minhash. The prefixTruePairs discipline: one eager
     * materialization of the narrow |docs|×Bands table, every consumer
     * reads blocks. */
@@ -810,7 +744,7 @@ object LlmOps {
     // ONE explode pass (r13): bg previously fed three independent
     // consumers (model bigram counts, model char counts, the per-doc
     // scoring probe), each re-running the whole-corpus char-bigram
-    // explode — 3 corpus passes per scores build (JobBreakdown r12:
+    // explode — 3 corpus passes per scores build (r12 per-job breakdown:
     // the dominant cost of q_filter_perplexity). The model counts are
     // EXACT integer rollups of the per-doc aggregate (Σ over docs of n
     // grouped by bgm ≡ count of bg rows by bgm), so aggregate once to

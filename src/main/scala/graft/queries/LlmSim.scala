@@ -12,7 +12,7 @@ import graft.operators.Ckpt._
   * from LlmOps.scala (round 10) along the family seam; shared constants
   * and the determinism contract live in [[LlmOps]].
   */
-object LlmSim {
+object LlmSim extends Catalog {
   import LlmOps._
 
   val queries: Map[String, Q] = strictMap(
@@ -111,7 +111,7 @@ object LlmSim {
       // EAGER ckpt: tf feeds three consumers (dfreq, the doc count, the
       // final join); relying on AQE exchange reuse left the token
       // pipeline materializing once per consumer under the concurrent
-      // broadcast builds (JobBreakdown r12: three ~400 ms duplicate
+      // broadcast builds (r12 per-job breakdown: three ~400 ms duplicate
       // jobs). One materialization, consumers read blocks.
       import graft.operators.Ckpt._
       val tf = toks(s, dir).groupBy("doc_id", "word")

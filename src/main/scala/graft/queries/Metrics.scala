@@ -16,7 +16,7 @@ import graft.operators.Ckpt._
   * a log is irreducible, 6-decimal contribution rounding + decimal sums,
   * and one terminal division shared verbatim with the oracle.
   */
-object Metrics {
+object Metrics extends Catalog {
 
   type Q = (SparkSession, String) => DataFrame
 

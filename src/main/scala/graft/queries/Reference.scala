@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * Each query runs over the harness `documents` table (the corpus) and has a
   * DuckDB oracle twin built from the same regex constants.
   */
-object Reference {
+object Reference extends Catalog {
   import Tokenize.{Delim, KeepRegex}
 
   /** DuckDB CTE mirroring [[Tokenize.tokenize]] over `documents`. */

@@ -11,7 +11,7 @@ import graft.operators.Ckpt._
   * resampling. Split from Relational.scala (round 10); shared helpers
   * live in [[Relational]] (imported below).
   */
-object RelEvents {
+object RelEvents extends Catalog {
   import Relational._
 
   val queries: Map[String, Q] = strictMap(

@@ -11,7 +11,7 @@ import graft.operators.Ckpt._
   * and bounded-seed closeness. Split from Relational.scala (round 10);
   * shared helpers live in [[Relational]] (imported below).
   */
-object RelGraph {
+object RelGraph extends Catalog {
   import Relational._
 
   val queries: Map[String, Q] = strictMap(

@@ -12,7 +12,7 @@ import graft.operators.Ckpt._
   * the exact percentile variants. Split from Relational.scala (round 10);
   * shared helpers live in [[Relational]] (imported below).
   */
-object RelStats {
+object RelStats extends Catalog {
   import Relational._
 
   val queries: Map[String, Q] = strictMap(

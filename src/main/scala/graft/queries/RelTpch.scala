@@ -11,7 +11,7 @@ import graft.operators.Ckpt._
   * from Relational.scala (round 10) along the family seam. Shared helpers
   * live in [[Relational]] (imported below).
   */
-object RelTpch {
+object RelTpch extends Catalog {
   import Relational._
 
   val queries: Map[String, Q] = strictMap(

@@ -17,7 +17,7 @@ import graft.operators.Ckpt._
   * joins shuffle on the join key once and aggregate partially map-side, and
   * sorts happen only on final (small) results or via range partitioning.
   */
-object Relational {
+object Relational extends Catalog {
 
   /** q_triangles: minimum shared-order count for a co-purchase edge.
     * Uniform synthetic data makes the unweighted projection near-complete

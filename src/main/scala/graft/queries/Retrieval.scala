@@ -29,7 +29,7 @@ import graft.operators.Ckpt._
   * full per-query group on one task. The display-rank windows run over the
   * ≤ k·|queries| survivors only.
   */
-object Retrieval {
+object Retrieval extends Catalog {
 
   type Q = (SparkSession, String) => DataFrame
 

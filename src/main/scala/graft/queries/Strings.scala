@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * in corpus size), then pairs WITHIN the vocabulary under an explicit
   * candidate rule. Nothing is ever corpus × corpus.
   */
-object Strings {
+object Strings extends Catalog {
 
   /** Vocabulary length floor (drops stopword-sized noise). */
   private val MinLen = 3

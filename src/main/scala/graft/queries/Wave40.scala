@@ -36,7 +36,7 @@ import graft.operators.Ckpt._
   * window (max(least(rn, c)) is the same for any descending order);
   * recalls are integer hit counts over exact-integer-cosine ranks;
   * stream counts are integers. */
-object Wave40 {
+object Wave40 extends Catalog {
 
   private val ProbeK = 5
   private val CorenessRounds = 40

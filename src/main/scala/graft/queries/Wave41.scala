@@ -34,7 +34,7 @@ import graft.operators.Ckpt._
   * threshold); densities/ratios/cosines are terminal round-6 divisions
   * spelled identically in both engines; empty rungs are CASE → NULL on
   * both sides. */
-object Wave41 {
+object Wave41 extends Catalog {
 
   /** Rich-club degree rungs (part-graph degrees are basket-capped small). */
   private val RichKs = Seq(1L, 2L, 3L, 4L)

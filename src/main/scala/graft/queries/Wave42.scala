@@ -42,7 +42,7 @@ import graft.operators.Ckpt._
   * session processor keys state on epoch-MILLIS (ts.getTime), which the
   * oracle mirrors with epoch_ms(ts).
   */
-object Wave42 {
+object Wave42 extends Catalog {
 
   /** Peeling rounds emitted (0 = the input graph). log₁.₁-ish decay: the
     * sf0.01 part graph peels to its dense core well inside 6 rounds; the

@@ -34,7 +34,7 @@ import graft.operators.Ckpt._
   * share; coloring selects by exact integer id comparisons — no hashes, no
   * floats anywhere in the wave except nothing (all columns BIGINT).
   */
-object Wave43 {
+object Wave43 extends Catalog {
 
   /** CMS geometry (must match StreamOps.streamingCms defaults AND the
     * oracle's cell rule). */

@@ -30,7 +30,7 @@ import graft.operators.Ckpt._
   * navigation outputs are selections (no accumulation), rounded copies of
   * single input cells.
   */
-object Wave44 {
+object Wave44 extends Catalog {
 
   /** Range buckets (boundaries = octiles of the sample). */
   private val Buckets = 8

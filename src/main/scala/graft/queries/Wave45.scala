@@ -30,7 +30,7 @@ import graft.operators.Ckpt._
   * Determinism: everything is BIGINT (ids, depths, counts, cents,
   * products); both queries end in total ORDER BYs.
   */
-object Wave45 {
+object Wave45 extends Catalog {
 
   /** Doubling rounds: closure reach 2^4 = 16 ≥ any parent-chain depth
     * (depth = decimal digits of the largest part key − 1). */

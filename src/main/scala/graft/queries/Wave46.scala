@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * (Σ f_w)² fits comfortably (corpus token counts ≪ 2^31); the estimate
   * is one terminal division rounded to 6.
   */
-object Wave46 {
+object Wave46 extends Catalog {
 
   /** Estimator count (one sketch row each; mean-combined). */
   private val AmsK = 16

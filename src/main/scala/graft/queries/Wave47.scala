@@ -22,7 +22,7 @@ import graft.operators.Ckpt._
   * BIGINT; the median of 5 integers is an exact order statistic (3rd of
   * the sorted list) — no float path exists in the whole query.
   */
-object Wave47 {
+object Wave47 extends Catalog {
 
   private val CsDepth = 5
   private val CsWidth = 64

@@ -23,7 +23,7 @@ import graft.operators.Ckpt._
   * (count desc, suppkey asc), arrivals are integer minima; seed arrival is
   * −1 (before any real date) so every first-hop edge qualifies.
   */
-object Wave48 {
+object Wave48 extends Catalog {
 
   /** Relaxation rounds = the reach-prefix depth (both engines). */
   private val ReachRounds = 4

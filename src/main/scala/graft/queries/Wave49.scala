@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * min_by over integers with a 4-row broadcast fallback; occupancy shares
   * are terminal round-6 divisions.
   */
-object Wave49 {
+object Wave49 extends Catalog {
 
   private val OldShards = 4
   private val NewShards = 5 // OldShards + 1

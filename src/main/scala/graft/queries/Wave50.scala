@@ -23,7 +23,7 @@ import graft.operators.Ckpt._
   * Determinism: all pure integer (floor tile dims, floor means, bit
   * sums); the funnel is exact counts.
   */
-object Wave50 {
+object Wave50 extends Catalog {
 
   private val TileCap = 64 // bucket df-cap (the LlmOps.BandBucketCap value)
 

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *
   * Determinism: everything is exact integer arithmetic on both sides.
   */
-object Wave51 {
+object Wave51 extends Catalog {
 
   private val FrameLen = 100
 

@@ -25,7 +25,7 @@ import graft.operators.Ckpt._
   *
   * Determinism: pure integer counts and key checksums; total ORDER BYs.
   */
-object Wave52 {
+object Wave52 extends Catalog {
 
   private val CloseRounds = 5
 

@@ -21,7 +21,7 @@ import graft.operators.Ckpt._
   * before the final round-6 normalization — both spelled identically in
   * both engines.
   */
-object Wave53 {
+object Wave53 extends Catalog {
 
   private val VocabTop = 256
   private val Eta = 4

@@ -31,7 +31,7 @@ import graft.operators.Ckpt._
   * Determinism: both axes are integer days / micros; values are round-2
   * copies; fractions are terminal round-6.
   */
-object Wave54 {
+object Wave54 extends Catalog {
 
   /** Watermark delays audited (micros). */
   private val Delays = Seq(60L, 300L, 600L, 1800L).map(_ * 1000000L)

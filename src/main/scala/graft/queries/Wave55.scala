@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * Determinism: exact counts; quantity is integer-valued in the fixture;
   * ratios are terminal round-6.
   */
-object Wave55 {
+object Wave55 extends Catalog {
 
   /** Audited columns (stacked into rows). */
   private val Cols = Seq("l_returnflag", "l_linestatus", "l_quantity")

@@ -24,7 +24,7 @@ import graft.operators.Ckpt._
   * impossible at this scale), ranks are row_numbers over (score desc),
   * and the whole state recursion is integer-exact.
   */
-object Wave56 {
+object Wave56 extends Catalog {
 
   private val NSide = 16
   private val Rounds = 6

@@ -22,7 +22,7 @@ import graft.operators.Ckpt._
   * Determinism: distances/counts are exact integers; the cube output
   * orders by flags then coalesced group keys (total).
   */
-object Wave57 {
+object Wave57 extends Catalog {
 
   private val ApspRounds = 5
 

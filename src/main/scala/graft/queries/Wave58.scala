@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * NULLs where Spark's concat() absorbs them (concat_ws agrees, concat
   * does not).
   */
-object Wave58 {
+object Wave58 extends Catalog {
 
   /** (case_name, SQL expression evaluating to a STRING) — the expression
     * text is shared verbatim by both engines. */

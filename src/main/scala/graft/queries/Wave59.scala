@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * accumulated as a decimal sum; the final division is terminal round-6.
   * Event ordering ties break on event_id.
   */
-object Wave59 {
+object Wave59 extends Catalog {
 
   val queries: Map[String, Q] = strictMap(
 

@@ -48,7 +48,7 @@ import graft.operators.Ckpt._
   * terms; template skeletons and CDC chunk hashes are md5-exact; every
   * output ends in a total ORDER BY.
   */
-object Wave60 {
+object Wave60 extends Catalog {
 
   /** Katz attenuation and iteration count (unrolled in both engines). */
   private val KatzAlpha = "0.05"

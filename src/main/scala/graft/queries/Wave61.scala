@@ -32,7 +32,7 @@ import graft.operators.Ckpt._
   * Determinism: decimal-summed 8-decimal terms, deterministic argmax
   * tie-breaks, total ORDER BYs.
   */
-object Wave61 {
+object Wave61 extends Catalog {
 
   private val EigenIters = 3
 

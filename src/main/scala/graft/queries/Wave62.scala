@@ -47,7 +47,7 @@ import graft.operators.Ckpt._
   * LWW winners are unique by (ts, event_id); all outputs end in total
   * ORDER BYs.
   */
-object Wave62 {
+object Wave62 extends Catalog {
 
   private val SimRankC = "0.8"
   private val SimRankIters = 3

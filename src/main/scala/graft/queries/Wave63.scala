@@ -43,7 +43,7 @@ import graft.operators.Ckpt._
   * rounded from exact integers; set-cover argmax ties break by source;
   * all outputs end in total ORDER BYs.
   */
-object Wave63 {
+object Wave63 extends Catalog {
 
   /** 2-state HMM log-weights, Scala-computed 8-decimal literals:
     * stay/switch 0.8/0.2; state 1 emits busy days with p=.7, state 0

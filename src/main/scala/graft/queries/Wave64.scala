@@ -38,7 +38,7 @@ import graft.operators.Ckpt._
   * literal integers; argmax ties break by word; every division is a
   * terminal round from exact integers; total ORDER BYs everywhere.
   */
-object Wave64 {
+object Wave64 extends Catalog {
 
   /** Items kept per user for the ALS solve (md5-rank sampled constant —
     * the per-user solve must stay O(cap·k²) at any scale). */

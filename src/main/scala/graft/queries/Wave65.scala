@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   * rounded IEEE expression; argmins tie-break on the value axis; total
   * ORDER BYs everywhere.
   */
-object Wave65 {
+object Wave65 extends Catalog {
 
   /** Rolling-regression window length (events). */
   private val SlopeW = 5

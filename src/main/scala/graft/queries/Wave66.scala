@@ -35,7 +35,7 @@ import graft.operators.Ckpt._
   * exact integers; k-center distances are exact integers end-to-end;
   * total ORDER BYs everywhere.
   */
-object Wave66 {
+object Wave66 extends Catalog {
 
   /** DP-release top-k size; the md5-derived noise is ±10.00 in count
     * units (score = 100·count + noise, noise ∈ [−1000, 1000]). */

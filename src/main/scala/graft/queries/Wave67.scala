@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * over exact integers; the placebo assignment is md5-derived; total
   * ORDER BYs everywhere.
   */
-object Wave67 {
+object Wave67 extends Catalog {
 
   val queries: Map[String, Q] = strictMap(
 

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * round-12 from exact integer pairs, and the minimax over them
   * compares identical doubles in both engines.
   */
-object Wave9 {
+object Wave9 extends Catalog {
 
   /** Integer-cents quantization of the events `value` double. */
   private val CentsSpark =
@@ -404,7 +404,7 @@ object Wave9 {
   * and jackknife pseudo-deviations are round-12 from identical float
   * chains — every query ends bounded and totally ordered.
   */
-object Wave11 {
+object Wave11 extends Catalog {
 
   /** Integer-cents quantization of the events `value` double. */
   private val CentsSpark =
@@ -653,7 +653,7 @@ object Wave11 {
   * (DECIMAL(38,0) / HUGEINT) with one terminal IEEE division; the MDE
   * chain is sqrt/÷/× of exact counts — all correctly-rounded IEEE ops
   * spelled identically in both engines (no libm-divergent ln/exp). */
-object Wave19 {
+object Wave19 extends Catalog {
 
   /** z_{0.975} + z_{0.80} pre-summed as one literal (2.80158521) so
     * neither engine's decimal-promotion rules touch the sum. */
@@ -880,7 +880,7 @@ object Wave19 {
   * exact integer rational under Laplace smoothing, so the round-8 ln
   * discipline applies; gains/lift are terminal divisions of exact
   * counts. */
-object Wave21 {
+object Wave21 extends Catalog {
 
   val queries: Map[String, Q] = strictMap(
 
@@ -1161,7 +1161,7 @@ object Wave21 {
   * argument are EXACT integers (cumulative deviations scaled by the
   * block width), so R/S pays one sqrt + one division per block; norm
   * percentiles are exact integer norm² selections. */
-object Wave29 {
+object Wave29 extends Catalog {
 
   /** R/S block widths (days). */
   private val Widths = Seq(8L, 16L, 32L, 64L)
@@ -1463,7 +1463,7 @@ object Wave29 {
   * bit-identical double arguments (correctly-rounded divisions of exact
   * integers, identical spelling both engines); IV is a decimal sum of
   * round-8 terms. */
-object Wave32 {
+object Wave32 extends Catalog {
 
   /** LF j abstains when h % 10 < 3 + j and flips the truth when
     * h % 100 < 10 + 5j — coverage and accuracy both vary by LF. */

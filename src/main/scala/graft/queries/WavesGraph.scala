@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * metadata grid (k = |event types|), unrolled identically in the
   * oracle; lift/confidence are one float chain over exact counts.
   */
-object Wave12 {
+object Wave12 extends Catalog {
 
   /** Power-iteration rounds for the stationary distribution and the
     * truncated absorbing-horizon — unrolled in the oracle. */
@@ -299,7 +299,7 @@ object Wave12 {
   * Determinism: closure and coalitions are integer/bitmask algebra;
   * Shapley weights s!(k−1−s)!/k! are build-time round-8 literals; every
   * division is correctly rounded from exact integer counts. */
-object Wave26 {
+object Wave26 extends Catalog {
 
   /** Marketing channels (alphabetical, bit i = 2^i) — the generator's
     * fixed non-purchase event taxonomy. */
@@ -341,13 +341,13 @@ object Wave26 {
       val nodes = e.select(col("u")).unionByName(e.select(col("v").as("u")))
         .distinct()
       var r = e.unionByName(nodes.select(col("u"), col("u").as("v")))
-        .distinct().localCheckpoint(true)
+        .distinct().ckpt()
       for (_ <- 1 to 5)
         r = r.unionByName(
             r.select(col("u"), col("v").as("w"))
               .join(r.select(col("u").as("w"), col("v")), "w")
               .select("u", "v"))
-          .distinct().localCheckpoint(true)
+          .distinct().ckpt()
       val scc = r.join(r.select(col("v").as("u"), col("u").as("v")),
           Seq("u", "v"))
         .groupBy("u").agg(min("v").as("scc"))
@@ -595,7 +595,7 @@ object Wave26 {
   *
   * Determinism: set sizes and join profiles are exact integers;
   * Jaccard/lift/ratios are terminal correctly-rounded divisions. */
-object Wave28 {
+object Wave28 extends Catalog {
 
   val queries: Map[String, Q] = strictMap(
 
@@ -794,7 +794,7 @@ object Wave28 {
   *
   * Determinism: matching is pure integer min algebra (the same matching
   * in any engine/partitioning); FD statistics are exact counts. */
-object Wave33 {
+object Wave33 extends Catalog {
 
   private val MatchMinW = 5
   private val MatchRounds = 3
@@ -915,7 +915,7 @@ object Wave33 {
   *
   * Determinism: thresholds, degrees and component labels are pure
   * integer algebra; min-label CC is engine- and partition-invariant. */
-object Wave34 {
+object Wave34 extends Catalog {
 
   // sweep starts AT the established co-purchase noise floor (w ≥ 5, the
   // q_triangles semantics): below it the projection is near-complete and
@@ -1090,7 +1090,7 @@ object Wave34 {
   * Determinism: the (w, u, v) total order makes every per-component pick
   * unique (no float, no hash, no partition dependence); component labels
   * are min vertex ids — pure integer algebra in both engines. */
-object Wave36 {
+object Wave36 extends Catalog {
 
   /** Co-purchase noise floor (the q_matching / q_percolation semantics). */
   private val MstMinW = 5
@@ -1273,7 +1273,7 @@ object Wave36 {
   * edges rank by (count DESC, suppkey ASC) — no floats, no hashes. The
   * recent-K buffer orders by (epoch-millis, event_id) — the exact state
   * key the processor sorts on — spelled identically in the oracle. */
-object Wave39 {
+object Wave39 extends Catalog {
 
   /** Successors kept per supplier: constant out-degree at any SF. */
   private val TopSucc = 3

@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   * trigram counts, cross-multiplied thresholds); displayed ratios are
   * terminal round-4/6 chains identical in both engines.
   */
-object Wave17 {
+object Wave17 extends Catalog {
 
   /** Recall depth (matches q_ann_ivf's emitted k). */
   private val RecallK = 5
@@ -411,7 +411,7 @@ object Wave17 {
   * tie-breaks; every ln rides the round-8 idiom; least-squares sums
   * go through exact DECIMAL ([[queries.dsum]]); LSH/truth membership
   * is decided by exact integer cross-multiplies. */
-object Wave18 {
+object Wave18 extends Catalog {
 
   /** Head size for the Zipf fit: large enough that the slope is not
     * dominated by the 2-3 stopword outliers, small enough that the
@@ -684,7 +684,7 @@ object Wave18 {
   * frequency percentiles are rank-selected integers (the
   * q_percentile_disc convention); burstiness is one identically-spelled
   * IEEE chain (sqrt is correctly rounded — no libm-divergent ln). */
-object Wave20 {
+object Wave20 extends Catalog {
 
   val queries: Map[String, Q] = strictMap(
 
@@ -914,7 +914,7 @@ object Wave20 {
   * the quality gate is a cross-multiply; seasonal strength's residual
   * terms ride round-8 + decimal sums with one identically-spelled
   * float chain. */
-object Wave22 {
+object Wave22 extends Catalog {
 
   val queries: Map[String, Q] = strictMap(
 
@@ -1106,7 +1106,7 @@ object Wave22 {
   * Determinism: gaps/counts are exact integers; entropy terms are
   * round-8 ln of exact integer rationals times integer counts,
   * decimal-summed; prefix membership is the shared md5 bucket. */
-object Wave27 {
+object Wave27 extends Catalog {
 
   /** Gap thresholds (minutes) for the sessionization sweep. */
   private val Gaps = Seq(10L, 30L, 60L)
@@ -1299,7 +1299,7 @@ object Wave27 {
   * fill^k is k explicit multiplications (no pow); the decomposition's
   * one mean division per stage is round-8 before reuse; cache hits are
   * exact conditional sums over ranked keys. */
-object Wave30 {
+object Wave30 extends Catalog {
 
   private val BloomM = 131072L // 2^17 bits
   private val BloomK = 7
@@ -1547,7 +1547,7 @@ object Wave30 {
   *    materialized, and the pair sums run 128-bit (a degenerate bucket
   *    of 10⁹ docs squares past int64).
   */
-object Wave35 {
+object Wave35 extends Catalog {
 
   /** Banding configs over the 16-hash family: b·r = 16. */
   private val Configs = Seq((2, 8), (4, 4), (8, 2))
@@ -1658,7 +1658,7 @@ object Wave35 {
   * (ratios are divisions of exact integers, spelled identically in both
   * engines); MST + CC labels are min-id integer fixpoints; NN-descent
   * ranks by round-6 cosine of exact integer dots, ties to smaller id. */
-object Wave37 {
+object Wave37 extends Catalog {
 
   /** Sorted-neighborhood window (the q_er_sorted_neighborhood geometry). */
   private val SnWindow = 3
@@ -2013,7 +2013,7 @@ object Wave37 {
   * Determinism: votes, overlaps and priorities are pure integer algebra;
   * kNN neighbor ranks order by the exact-integer-dot cosine (identical
   * IEEE divisions both engines) with id tie-breaks. */
-object Wave38 {
+object Wave38 extends Catalog {
 
   private val KnnK = 3
   private val MisRounds = 3

@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * Scale notes per query inline; none of these carries a whole-corpus
   * window or an uncapped join.
   */
-object Wave7 {
+object Wave7 extends Catalog {
 
   /** Integer-cents quantization of the events `value` double — the house
     * floor(x·100 + 0.5) spelling, identical in both engines, so ranks
@@ -482,7 +482,7 @@ object Wave7 {
   * 8-decimal pre-rounded weights — the q_sprt pattern), and every query
   * ends in a bounded, totally-ordered result.
   */
-object Wave8 {
+object Wave8 extends Catalog {
 
   /** Integer-cents quantization of the events `value` double (the house
     * floor(x·100 + 0.5) spelling — exact and identical in both engines). */
@@ -990,7 +990,7 @@ object Wave8 {
   * DP score is an exact dyadic multiple (×0.125) of an integer utility
   * plus round-8 PRF noise, and every query ends totally ordered.
   */
-object Wave10 {
+object Wave10 extends Catalog {
 
   /** Integer-cents quantization of the events `value` double. */
   private val CentsSpark =
@@ -1234,7 +1234,7 @@ object Wave10 {
   * decimal sum → terminal round, and the only transcendental is
   * sqrt (correctly rounded IEEE in both engines).
   */
-object Wave13 {
+object Wave13 extends Catalog {
 
   /** Censoring horizon (hours) for the log-rank arms — matches
     * q_survival's administrative-censoring contract. */
@@ -1662,7 +1662,7 @@ object Wave13 {
   * house per-term round-8 → decimal sum → terminal round spelling;
   * the only transcendental is round-8 ln of exact rationals.
   */
-object Wave14 {
+object Wave14 extends Catalog {
 
   private val DayUs = 24L * 3600L * 1000000L
 
@@ -2004,7 +2004,7 @@ object Wave14 {
   * DOUBLE where the operand itself can reach ~10¹⁰; terminal float
   * chains spelled identically in both engines.
   */
-object Wave15 {
+object Wave15 extends Catalog {
 
   /** Labeling budget for the Neyman allocation. */
   private val NeyB = 10000L

@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   * in ×100 cents; products that pass int64 in DECIMAL(38,0); one
   * identical terminal float chain per statistic.
   */
-object Wave16 {
+object Wave16 extends Catalog {
 
   private val DayUs = 24L * 3600L * 1000000L
 
@@ -315,7 +315,7 @@ object Wave16 {
   * from one identically-spelled sqrt chain then select exact values;
   * bloom constants are pre-folded literals (ln never evaluated at
   * query time). */
-object Wave23 {
+object Wave23 extends Catalog {
 
   /** bits/key = ln(1/p)/ln(2)² and k = round(bits/key · ln 2), folded
     * to literals at build time so no engine evaluates a libm ln. */
@@ -520,7 +520,7 @@ object Wave23 {
   * every float product is rounded to a fixed scale and decimal-summed
   * ([[queries.dsum]]); trig/eigen normalization constants are either
   * pre-folded literals or one identically-spelled IEEE chain. */
-object Wave24 {
+object Wave24 extends Catalog {
 
   /** cos/sin(2π m / p) for m ∈ [0, p), 8 dp, as a SQL literal list body.
     * Values within 5e-9 of zero are pinned to exactly "0.00000000" so
@@ -805,7 +805,7 @@ object Wave24 {
   * Determinism: runs are integer position arithmetic; AP terms are one
   * correctly-rounded division each, round-8 + decimal-summed; W derives
   * from exact BIGINT power sums through one identically-spelled chain. */
-object Wave25 {
+object Wave25 extends Catalog {
 
   val queries: Map[String, Q] = strictMap(
 
@@ -1041,7 +1041,7 @@ object Wave25 {
   * and nonconformity are round-8 doubles from exact integers with
   * identical spelling both engines, ranked under a (nc, event_id) total
   * order. */
-object Wave31 {
+object Wave31 extends Catalog {
 
   /** Synthetic rater count (hard agreement floor: each item gets exactly
     * this many ratings). */

@@ -19,12 +19,20 @@ import org.apache.spark.sql.types.DecimalType
 package object queries {
   type Q = (SparkSession, String) => DataFrame
 
+  /** One per-file query catalog: the Spark builders and their
+    * DuckDB-runnable oracle twins (same keys, same column names).
+    * `SparkEntry.catalogs` lists every one. */
+  trait Catalog {
+    def queries: Map[String, Q]
+    def oracle: Map[String, String]
+  }
+
   /** A Map literal with duplicate keys silently keeps the LAST entry — a
     * shadowed catalog query never reaches the gate (this happened: two
     * `q_cdc_apply` definitions coexisted for several commits, one
-    * invisible). Build every per-file catalog map through this strict
-    * constructor so a duplicate key is a construction-time failure, and
-    * CatalogSpec exercises it by loading all the maps. */
+    * invisible). Build every per-file catalog map, and SparkEntry's merge
+    * of them, through this strict constructor so a duplicate key is a
+    * construction-time failure. */
   def strictMap[V](pairs: (String, V)*): Map[String, V] = {
     val dups = pairs.groupBy(_._1).collect { case (k, vs) if vs.sizeIs > 1 => k }
     require(dups.isEmpty, s"duplicate catalog keys: ${dups.mkString(", ")}")
@@ -46,41 +54,31 @@ package object queries {
     * ONE row group — so every scan stage (and all the per-row compute
     * whole-stage codegen fuses into it: tokenize explodes, decimal
     * aggregation, scalar projections) runs as one task no matter how many
-    * byte-range splits the planner makes (JobBreakdown r12: q1_agg's
+    * byte-range splits the planner makes (r12 per-job breakdown: q1_agg's
     * "32-task" scan+partial-agg job ran 1.8 s = one real task; 31 splits
     * contained no row-group start). This is guide-§2.5 input skew — "one
     * huge unsplittable file: repartition immediately after the read".
     *
     * The widen is gated on the file FOOTER (real row-group count, not a
-    * size estimate): it fires only when the file offers fewer row groups
-    * than the configured shuffle width AND carries enough bytes for
-    * first-stage compute to matter. A cluster-scale table (row groups ≈
-    * bytes / 128 MB >> width) never trips the gate, so this is the
-    * identity at 100 TB — and a genuinely pathological big single-row-group
-    * file (one gzip-style unsplittable blob) correctly pays one shuffle to
-    * unlock the cluster. Keyless round-robin keeps the scan's ReadSchema
-    * untouched (no partition-key column is forced into the read — the
-    * q_wordcount column-pruning pin stays exact); Spark's
+    * size estimate; the gate is `operators.Ckpt.widenScan`): it fires
+    * only when the file offers fewer row groups than the configured
+    * shuffle width AND carries enough bytes for first-stage compute to
+    * matter. A cluster-scale table (row groups ≈ bytes / 128 MB >> width)
+    * never trips the gate, so this is the identity at 100 TB — and a
+    * genuinely pathological big single-row-group file (one gzip-style
+    * unsplittable blob) correctly pays one shuffle to unlock the cluster.
+    * Keyless round-robin keeps the scan's ReadSchema untouched (no
+    * partition-key column is forced into the read — the q_wordcount
+    * column-pruning pin stays exact); Spark's
     * sort-before-repartition default keeps the assignment deterministic
     * under task retry. Footer metadata is cached per path (file METADATA,
     * like Spark's own file index — never query results). */
   def wideTable(s: SparkSession, dir: String, name: String): DataFrame = {
     val df = table(s, dir, name)
-    // `spark.graft.scan.widen`: auto (footer gate, default) | off — the
-    // runtime A/B switch (the dedup-persist-knob discipline).
-    if (s.conf.get("spark.graft.scan.widen", "auto") == "off") return df
-    val nPart = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val (groups, bytes) = parquetFooterMeta(s, s"$dir/$name.parquet")
-    // 512 KB floor: skips the KB-scale dimension tables (nation/region/
-    // customer — no amplifying consumers, the exchange would be pure
-    // overhead) while catching documents/embeddings, whose consumers
-    // amplify 100-200× (tokenize/shingle/vector explodes), so file bytes
-    // understate the compute behind the scan.
-    if (groups < nPart && bytes > 512L * 1024)
-      // Tables outside the hard-coded key map (unexpected at the harness
-      // call sites, but reachable from tests) spread round-robin.
-      WidenKey.get(name).fold(df.repartition(nPart))(k => df.repartition(nPart, col(k)))
-    else df
+    // Tables outside the hard-coded key map (unexpected at the harness
+    // call sites, but reachable from tests) spread round-robin.
+    graft.operators.Ckpt.widenScan(df, groups, bytes, WidenKey.get(name))
   }
 
   /** Hash keys for [[wideTable]]'s spreading repartition. Keyless

@@ -13,86 +13,11 @@ class CatalogSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("no catalog key is shadowed across the per-file map merge") {
-    // within-file dups fail at construction (queries.strictMap); this
-    // catches a key defined in TWO files, where `++` keeps only the last
-    import graft.queries._
-    val files = Seq(
-      "Reference" -> Reference.queries.keySet,
-      "Relational" -> Relational.queries.keySet,
-      "RelTpch" -> RelTpch.queries.keySet,
-      "RelGraph" -> RelGraph.queries.keySet,
-      "RelStats" -> RelStats.queries.keySet,
-      "RelEvents" -> RelEvents.queries.keySet,
-      "LlmOps" -> LlmOps.queries.keySet,
-      "LlmDedup" -> LlmDedup.queries.keySet,
-      "LlmSim" -> LlmSim.queries.keySet,
-      "LlmMedia" -> LlmMedia.queries.keySet,
-      "Analytics" -> Analytics.queries.keySet,
-      "Retrieval" -> Retrieval.queries.keySet,
-      "Geo" -> Geo.queries.keySet, "Graphs" -> Graphs.queries.keySet,
-      "Metrics" -> Metrics.queries.keySet,
-      "Strings" -> Strings.queries.keySet,
-      "Wave7" -> Wave7.queries.keySet,
-      "Wave8" -> Wave8.queries.keySet,
-      "Wave9" -> Wave9.queries.keySet,
-      "Wave10" -> Wave10.queries.keySet,
-      "Wave11" -> Wave11.queries.keySet,
-      "Wave12" -> Wave12.queries.keySet,
-      "Wave13" -> Wave13.queries.keySet,
-      "Wave14" -> Wave14.queries.keySet,
-      "Wave15" -> Wave15.queries.keySet,
-      "Wave16" -> Wave16.queries.keySet,
-      "Wave17" -> Wave17.queries.keySet,
-      "Wave18" -> Wave18.queries.keySet,
-      "Wave19" -> Wave19.queries.keySet,
-      "Wave20" -> Wave20.queries.keySet,
-      "Wave21" -> Wave21.queries.keySet,
-      "Wave22" -> Wave22.queries.keySet,
-      "Wave23" -> Wave23.queries.keySet,
-      "Wave24" -> Wave24.queries.keySet,
-      "Wave25" -> Wave25.queries.keySet,
-      "Wave26" -> Wave26.queries.keySet,
-      "Wave27" -> Wave27.queries.keySet,
-      "Wave28" -> Wave28.queries.keySet,
-      "Wave29" -> Wave29.queries.keySet,
-      "Wave30" -> Wave30.queries.keySet,
-      "Wave31" -> Wave31.queries.keySet,
-      "Wave32" -> Wave32.queries.keySet,
-      "Wave33" -> Wave33.queries.keySet,
-      "Wave34" -> Wave34.queries.keySet,
-      "Wave35" -> Wave35.queries.keySet,
-      "Wave36" -> Wave36.queries.keySet,
-      "Wave37" -> Wave37.queries.keySet,
-      "Wave38" -> Wave38.queries.keySet,
-      "Wave39" -> Wave39.queries.keySet,
-      "Wave40" -> Wave40.queries.keySet,
-      "Wave41" -> Wave41.queries.keySet,
-      "Wave42" -> Wave42.queries.keySet,
-      "Wave43" -> Wave43.queries.keySet,
-      "Wave44" -> Wave44.queries.keySet,
-      "Wave45" -> Wave45.queries.keySet,
-      "Wave46" -> Wave46.queries.keySet,
-      "Wave47" -> Wave47.queries.keySet,
-      "Wave48" -> Wave48.queries.keySet,
-      "Wave49" -> Wave49.queries.keySet,
-      "Wave50" -> Wave50.queries.keySet,
-      "Wave51" -> Wave51.queries.keySet,
-      "Wave52" -> Wave52.queries.keySet,
-      "Wave53" -> Wave53.queries.keySet,
-      "Wave54" -> Wave54.queries.keySet,
-      "Wave55" -> Wave55.queries.keySet,
-      "Wave56" -> Wave56.queries.keySet,
-      "Wave57" -> Wave57.queries.keySet,
-      "Wave58" -> Wave58.queries.keySet,
-      "Wave59" -> Wave59.queries.keySet,
-      "Wave60" -> Wave60.queries.keySet,
-      "Wave61" -> Wave61.queries.keySet,
-      "Wave62" -> Wave62.queries.keySet,
-      "Wave63" -> Wave63.queries.keySet,
-      "Wave64" -> Wave64.queries.keySet,
-      "Wave65" -> Wave65.queries.keySet,
-      "Wave66" -> Wave66.queries.keySet,
-      "Wave67" -> Wave67.queries.keySet)
+    // within-file dups fail at construction (queries.strictMap), and so
+    // does a key defined in TWO files (SparkEntry's strict merge); this
+    // names the colliding files
+    val files = SparkEntry.catalogs.map(c =>
+      c.getClass.getSimpleName.stripSuffix("$") -> c.queries.keySet)
     assert(files.map(_._2.size).sum == SparkEntry.queries.size,
       s"cross-file duplicate keys: ${
         files.combinations(2).flatMap { case Seq((a, ka), (b, kb)) =>

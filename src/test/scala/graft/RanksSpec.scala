@@ -25,29 +25,21 @@ class RanksSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("~1e5 distinct keys: identical ranks under every offsets-join policy") {
+  test("~1e5 distinct keys: ranks equal the in-memory sort rank") {
     // The high-cardinality guard (Ranks scaladoc): the offsets table is
-    // parts × |keys| rows, too big to force-broadcast safely in general.
-    // Prove the rank is policy-independent — broadcast ("force"), shuffled
-    // ("off"), and AQE-decided ("auto") all agree at 1e5 distinct keys.
+    // parts × |keys| rows, too big to force-broadcast safely in general,
+    // so AQE sizes the offsets join at runtime. Prove the rank is still
+    // exact at 1e5 distinct keys.
     val rows = (1L to 200000L).map(id => (id % 100000, id * 31 % 997, id))
-    val df = rows.toDF("k", "v", "id")
-    def run(policy: String): Map[Long, Long] = {
-      spark.conf.set(Ranks.OffsetsBroadcastConf, policy)
-      try Ranks.withinKey(df, "k", Seq("v", "id"), 8)
-        .select("id", "rk").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toMap
-      finally spark.conf.unset(Ranks.OffsetsBroadcastConf)
-    }
-    val auto = run("auto")
+    val got = Ranks.withinKey(rows.toDF("k", "v", "id"), "k", Seq("v", "id"), 8)
+      .select("id", "rk").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap
     // spot-check against the in-memory rank law: each key has 2 rows
     val want = rows.groupBy(_._1).flatMap { case (_, rs) =>
       rs.sortBy(r => (r._2, r._3)).zipWithIndex
         .map { case (r, i) => (r._3, (i + 1).toLong) }
     }
-    assert(auto == want)
-    assert(run("force") == auto)
-    assert(run("off") == auto)
+    assert(got == want)
   }
 
   test("a single huge key spans range partitions (no single-task rank)") {
