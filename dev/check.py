@@ -18,7 +18,8 @@ writer and asserts the file appears with the planted values (exit 0 = ok).
 import json, math, subprocess, sys
 from pathlib import Path
 
-DIFF_DIR = Path("/root/repo/target/verify_diff")
+REPO = Path(__file__).resolve().parents[1]
+DIFF_DIR = REPO / "target" / "verify_diff"
 
 
 def write_diff(name, kind, detail, s=None, d=None, max_rows=5):
@@ -79,7 +80,7 @@ def main():
     import duckdb
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     sf_dir = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
-    out_dir = args[1] if len(args) > 1 else "/root/repo/target/verify_out"
+    out_dir = args[1] if len(args) > 1 else str(REPO / "target" / "verify_out")
     only = set(args[2:])
     if "--skip-verify" not in sys.argv:
         # named queries propagate to Verify so the dev loop dumps only
@@ -88,7 +89,7 @@ def main():
         r = subprocess.run(
             ["sbt", "-batch",
              f'runMain graft.Verify {sf_dir} {out_dir} {names}'.strip()],
-            cwd="/root/repo", capture_output=True, text=True)
+            cwd=REPO, capture_output=True, text=True)
         sys.stdout.write("\n".join(r.stdout.splitlines()[-15:]) + "\n")
         if r.returncode != 0:
             print("VERIFY FAILED"); print(r.stderr[-3000:]); sys.exit(1)

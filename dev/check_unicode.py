@@ -13,8 +13,9 @@ import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-ROOT = Path("/root/repo/target/unicode_sf")
-OUT = Path("/root/repo/target/unicode_verify_out")
+REPO = Path(__file__).resolve().parents[1]
+ROOT = REPO / "target" / "unicode_sf"
+OUT = REPO / "target" / "unicode_verify_out"
 
 TEXT_QUERIES = [
     "q_tokenize", "q_wordcount", "q_distinct", "q_encode", "q_topk",
@@ -50,6 +51,10 @@ DOCS = [
     "vielen wörtern und ein paar unterschieden ganz am ende läuft weiter",
     "das lange gemeinsame präfix über café straße naïve dokument mit "
     "vielen wörtern und ein paar unterschieden ganz am ende läuft anders",
+    # the tokenizer's non-ASCII path: a leading delimiter, delimiter runs,
+    # a digits-only token (dropped), and tokens kept only because İ
+    # (U+0130) and the Kelvin sign (U+212A) lowercase into [`-z]
+    "°°x° İstanbul \u212a 2024 \u212a°İ",
 ]
 
 
@@ -58,7 +63,8 @@ def main():
     docs = pa.table({
         "doc_id": pa.array(range(len(DOCS)), pa.int64()),
         "text": pa.array(DOCS, pa.string()),
-        "lang": pa.array(["fr", "de", "en", "de", "en", "fr", "en", "de", "de"], pa.string()),
+        "lang": pa.array(["fr", "de", "en", "de", "en", "fr", "en", "de", "de",
+                          "tr"], pa.string()),
         "source": pa.array(["s0"] * len(DOCS), pa.string()),
         "n_chars": pa.array([len(t) for t in DOCS], pa.int64()),
     })
@@ -73,7 +79,7 @@ def main():
 
     r = subprocess.run(
         ["sbt", "-batch", f"runMain graft.Verify {ROOT} {OUT}"],
-        cwd="/root/repo", capture_output=True, text=True)
+        cwd=REPO, capture_output=True, text=True)
     if r.returncode != 0:
         print("VERIFY FAILED"); print(r.stderr[-2000:]); sys.exit(1)
 

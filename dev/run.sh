@@ -3,6 +3,10 @@
 # Usage: dev/run.sh graft.PlanAudit [args...]
 # Mirrors build.sbt's forked-JVM options (JDK17 add-opens, locale, UTC, mem).
 MAIN="$1"; shift
+REPO="$(cd "$(dirname "$0")/.." && pwd)"
+# Spark's jars: $SPARK_HOME/jars, else the unmanagedBase build.sbt compiles against
+JARS="${SPARK_HOME:+$SPARK_HOME/jars}"
+JARS="${JARS:-$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' "$REPO/build.sbt")}"
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
   --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
@@ -20,5 +24,5 @@ exec java \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Duser.language=en -Duser.country=US \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$REPO/target/scala-2.13/classes:$JARS/*" \
   "$MAIN" "$@"

@@ -2,6 +2,10 @@
 # Like dev/run.sh but against the frozen target/audit-classes snapshot,
 # so long background runs survive recompiles of target/scala-2.13/classes.
 MAIN="$1"; shift
+REPO="$(cd "$(dirname "$0")/.." && pwd)"
+# Spark's jars: $SPARK_HOME/jars, else the unmanagedBase build.sbt compiles against
+JARS="${SPARK_HOME:+$SPARK_HOME/jars}"
+JARS="${JARS:-$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' "$REPO/build.sbt")}"
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
   --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
@@ -19,5 +23,5 @@ exec java \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Duser.language=en -Duser.country=US \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "/root/repo/target/audit-classes:/opt/spark/jars/*" \
+  -cp "$REPO/target/audit-classes:$JARS/*" \
   "$MAIN" "$@"

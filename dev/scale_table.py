@@ -11,7 +11,8 @@ import json, sys
 from pathlib import Path
 
 FLAG_R = 15.0   # 1.5x linear for 10x data
-d = json.loads(Path("/root/repo/target/scale_audit.json").read_text())
+TARGET = Path(__file__).resolve().parents[1] / "target"
+d = json.loads((TARGET / "scale_audit.json").read_text())
 
 def get(v, sf):
     e = v.get(sf) or {}
@@ -40,5 +41,5 @@ if "--md" in sys.argv:
            "|---|---|---|---|---|---|---|"]
     for (name, s01, s1, s10, wr, br, tr) in rows:
         out.append(f"| {name} | {s01:.2f} | {s1:.2f} | {s10:.2f} | {wr:.1f} | {br:.1f} | {tr:.1f} |")
-    Path("/root/repo/target/scale_table.md").write_text("\n".join(out) + "\n")
+    (TARGET / "scale_table.md").write_text("\n".join(out) + "\n")
     print("wrote target/scale_table.md")

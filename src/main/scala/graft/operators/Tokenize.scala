@@ -1,7 +1,9 @@
 package graft.operators
 
+import graft.plans.{KeepToken, KeptTokens}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlShim
 
 /** Reference-parity tokenization.
   *
@@ -20,11 +22,14 @@ import org.apache.spark.sql.functions._
   *    detail of `Exchange hashpartitioning`, so only the case-sensitive
   *    counting semantics are preserved.
   *
-  * Scale notes: tokenize is a narrow map (no shuffle); wordCount compiles to
-  * scan → generate → partial HashAggregate → single Exchange on `word` →
-  * final HashAggregate, all inside whole-stage codegen. Map-side partial
-  * aggregation is a strict improvement over the reference's per-occurrence
-  * network send (`ListenerReducer.java:123-139`) with identical results.
+  * Scale notes: tokenize is a narrow map (no shuffle) done by one native
+  * expression, `explode(kept_tokens(text))` — a byte scan that splits and
+  * applies the keep rule in a single pass, with no regex, no `lower` copy
+  * and no Filter node. wordCount compiles to scan → Generate → partial
+  * HashAggregate (one whole-stage-codegen stage) → single Exchange on
+  * `word` → final HashAggregate. Map-side partial aggregation is a strict
+  * improvement over the reference's per-occurrence network send
+  * (`ListenerReducer.java:123-139`) with identical results.
   */
 object Tokenize {
   /** `WorkerSender.java:216` delimiter class (Java & RE2 compatible). */
@@ -33,11 +38,17 @@ object Tokenize {
   /** Keep a token iff lower(token) has a char in backtick..'z'. */
   val KeepRegex = "[`-z]"
 
-  def keep(word: Column): Column = lower(word).rlike(KeepRegex)
+  /** The keep rule as a native predicate ([[graft.plans.KeepToken]]):
+    * `lower(word) RLIKE KeepRegex`, decided by the tokenizer kernel. */
+  def keep(word: Column): Column = GraftSqlShim.applyExpr(word)(KeepToken(_))
+
+  /** The kept tokens of `text`, in order ([[graft.plans.KeptTokens]]):
+    * `split(text, Delim)` filtered by [[keep]], in one scan. */
+  def keptTokens(text: Column): Column = GraftSqlShim.applyExpr(text)(KeptTokens(_))
 
   /** One output row per kept token; original spelling preserved. */
   def tokenize(df: DataFrame, textCol: String, out: String = "word"): DataFrame =
-    df.withColumn(out, explode(split(col(textCol), Delim))).where(keep(col(out)))
+    df.withColumn(out, explode(keptTokens(col(textCol))))
 
   /** Whitespace-normalized, order-preserving token array (for shingling). */
   def tokenArray(text: Column): Column =

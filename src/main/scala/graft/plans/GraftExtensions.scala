@@ -12,6 +12,8 @@ import org.apache.spark.sql.functions.call_function
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectFunction(GraftExtensions.keptTokensFn)
+    ext.injectFunction(GraftExtensions.keepTokenFn)
     ext.injectFunction(GraftExtensions.encodeWordFn)
     ext.injectFunction(GraftExtensions.levWithinFn)
     ext.injectFunction(GraftExtensions.interleaveBitsFn)
@@ -44,6 +46,31 @@ object GraftExtensions {
     new ExpressionInfo(clazz.getName, null, name, usage, "",
       "\n" + examples + "\n  ", // ExpressionInfo requires "\n    Examples:" prefix
       "", "misc_funcs", "4.0.0", "", "built-in")
+
+  private val keptTokensFn = (
+    new FunctionIdentifier("kept_tokens"),
+    info(classOf[KeptTokens], "kept_tokens",
+      "kept_tokens(text) - The word count's map phase: the tokens of text " +
+        "split on the reference delimiter class that pass the keep rule " +
+        "(lowercase has a char in backtick..z), in order, as one scan.",
+      "    Examples:\n      > SELECT kept_tokens('The 42 c\u00B0te');\n       [\"The\",\"c\",\"te\"]"),
+    (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+      require(children.length == 1,
+        s"kept_tokens expects exactly 1 argument, got ${children.length}")
+      KeptTokens(children.head)
+    })
+
+  private val keepTokenFn = (
+    new FunctionIdentifier("keep_token"),
+    info(classOf[KeepToken], "keep_token",
+      "keep_token(word) - The word count's keep rule on one token: true " +
+        "iff lower(word) has a char in backtick..z.",
+      "    Examples:\n      > SELECT keep_token('42');\n       false"),
+    (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+      require(children.length == 1,
+        s"keep_token expects exactly 1 argument, got ${children.length}")
+      KeepToken(children.head)
+    })
 
   private val encodeWordFn = (
     new FunctionIdentifier("encode_word"),
@@ -268,6 +295,10 @@ object GraftExtensions {
 
   /** Imperative registration for an existing session (tests, REPL). */
   def register(spark: SparkSession): Unit = {
+    spark.sessionState.functionRegistry.registerFunction(
+      keptTokensFn._1, keptTokensFn._2, keptTokensFn._3)
+    spark.sessionState.functionRegistry.registerFunction(
+      keepTokenFn._1, keepTokenFn._2, keepTokenFn._3)
     spark.sessionState.functionRegistry.registerFunction(
       hllRegisterAggFn._1, hllRegisterAggFn._2, hllRegisterAggFn._3)
     spark.sessionState.functionRegistry.registerFunction(

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle twin built from the same regex constants.
   */
 object Reference extends Catalog {
-  import Tokenize.{Delim, KeepRegex}
+  import Tokenize.KeepRegex
 
   /** DuckDB CTE mirroring [[Tokenize.tokenize]] over `documents`. */
   val ToksSql: String =
@@ -185,16 +185,15 @@ object Reference extends Catalog {
         .withColumn("checksum_stable", lit(ca == cb && xa == xb))
     }),
     // SQL front door: the flagship expressed through spark.sql over a temp
-    // view — the catalog is equally reachable via SQL text. NB the Spark
-    // SQL literal needs backslashes doubled (the parser consumes escapes).
+    // view — the catalog is equally reachable via SQL text, tokenizer
+    // kernel (`kept_tokens`) included.
     "q_sql_frontend" -> ((s, dir) => {
       docs(s, dir).createOrReplaceTempView("documents_v")
-      val delimSqlLit = Delim.replace("\\", "\\\\").replace("'", "\\'")
+      graft.plans.GraftExtensions.register(s)
       s.sql(
-        s"""SELECT word, count(*) AS cnt FROM (
-           |  SELECT explode(split(text, '$delimSqlLit')) AS word FROM documents_v
-           |) WHERE lower(word) RLIKE '$KeepRegex'
-           |GROUP BY word ORDER BY cnt DESC, word""".stripMargin)
+        """SELECT word, count(*) AS cnt FROM (
+          |  SELECT explode(kept_tokens(text)) AS word FROM documents_v
+          |) GROUP BY word ORDER BY cnt DESC, word""".stripMargin)
     }),
     // Corrupt-record tolerance: a CSV with planted malformed lines read
     // under PERMISSIVE mode — bad rows land in _corrupt_record instead of

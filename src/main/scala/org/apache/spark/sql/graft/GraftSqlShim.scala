@@ -1,17 +1,23 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Bridge into `private[sql] Dataset.ofRows` — the standard technique for
   * extension libraries that materialize a DataFrame from a custom
   * LogicalPlan (the public API offers no constructor for third-party
-  * logical nodes; session extensions only INJECT rules/strategies). Scoped
-  * to exactly this one call. */
+  * logical nodes; session extensions only INJECT rules/strategies). */
 object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A native catalyst expression applied to a Column (`private[sql]`
+    * `ExpressionUtils`): how the Column API reaches graft's expressions
+    * without going through a registered function name. */
+  def applyExpr(arg: Column)(f: Expression => Expression): Column =
+    classic.ExpressionUtils.column(f(classic.ExpressionUtils.expression(arg)))
 
   /** `localCheckpoint` that TRUNCATES STATISTICS along with lineage.
     *

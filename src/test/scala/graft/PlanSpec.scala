@@ -43,10 +43,50 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(p.contains("TakeOrderedAndProject"), p)
   }
 
+  test("q_topk: the map stage is one codegen span, explode(kept_tokens) into a partial aggregate") {
+    import org.apache.spark.sql.catalyst.expressions.{Explode, Lower, RLike, StringSplit}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.{FilterExec, GenerateExec, ProjectExec,
+      SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    val df = SparkEntry.queries("q_topk")(spark, Sf)
+    df.collect()
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    // the codegen span that holds the tokenizer: within one
+    // WholeStageCodegenExec, `children` stop at the stage's inputs
+    val spans = nodes(df.queryExecution.executedPlan).collect {
+      case w: WholeStageCodegenExec if w.exists(_.isInstanceOf[GenerateExec]) => w
+    }
+    assert(spans.size == 1, spans.mkString("\n"))
+    val span = spans.head
+    val gen = span.collect { case g: GenerateExec => g }
+    assert(gen.size == 1, span)
+    gen.head.generator match {
+      case Explode(graft.plans.KeptTokens(_)) =>
+      case other => fail(s"map phase generator is $other, not explode(kept_tokens)")
+    }
+    val partial = span.collect {
+      case h: HashAggregateExec if h.child == gen.head ||
+          h.child.isInstanceOf[ProjectExec] && h.child.children == Seq(gen.head) => h
+    }
+    assert(partial.size == 1 && partial.head.aggregateExpressions.forall(_.mode == Partial),
+      span)
+    assert(!span.exists(_.isInstanceOf[FilterExec]), span)
+    val regexPath = span.flatMap(_.expressions.flatMap(_.collect {
+      case e @ (_: RLike | _: StringSplit | _: Lower) => e
+    }))
+    assert(regexPath.isEmpty, regexPath)
+  }
+
   test("q_wordcount: scan pruned to the single text column") {
     val p = plan("q_wordcount")
-    // the keep-filter itself isn't pushable (regex), but the scan must be
-    // pruned to the single text column
+    // the tokenizer isn't pushable, but the scan must be pruned to the
+    // single text column
     val readSchema = "ReadSchema: struct<([^>]*)>".r
       .findFirstMatchIn(p).map(_.group(1)).getOrElse("")
     assert(readSchema == "text:string", readSchema)
