@@ -20,6 +20,7 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 DIFF_DIR = REPO / "target" / "verify_diff"
+TESTDATA = Path("/root/testdata")  # harness data, one sf<scale> dir each
 
 
 def write_diff(name, kind, detail, s=None, d=None, max_rows=5):
@@ -79,7 +80,7 @@ def main():
         selftest()
     import duckdb
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    sf_dir = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
+    sf_dir = args[0] if len(args) > 0 else str(TESTDATA / "sf0.01")
     out_dir = args[1] if len(args) > 1 else str(REPO / "target" / "verify_out")
     only = set(args[2:])
     if "--skip-verify" not in sys.argv:

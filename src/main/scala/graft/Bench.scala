@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", s"${PathRoot.TestData}/sf0.1")
     // Self-imposed wall deadline, measured from HERE (the driver's cap
     // additionally covers sbt/JVM spin-up — hence the default sits well
     // under the 42:16 that r10 survived): 34 min. The deadline governs
@@ -27,7 +27,7 @@ object Bench {
     // WARN per single-partition window execution and the r11 driver tail
     // was 100% that flood — the JSON line must own the tail.
     val spark = Sessions.build(logLevel = "ERROR")
-    try run(spark, sfDir, deadlineSec, Some("/root/repo/target/sf1"))
+    try run(spark, sfDir, deadlineSec, Some(s"${PathRoot.Target}/sf1"))
     finally spark.stop()
   }
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for catalog queries.
   * Usage: runMain graft.Explain [--exec] [sfDir] [queryName...]
   * (default: all). With `--exec` the query is collect()ed first so the
@@ -12,7 +10,7 @@ object Explain {
   def main(args0: Array[String]): Unit = {
     val exec = args0.contains("--exec")
     val args = args0.filterNot(_ == "--exec")
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val sfDir = args.headOption.getOrElse(s"${PathRoot.TestData}/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
     val spark = Sessions.build(cpus = "4", logLevel = "ERROR")

@@ -76,9 +76,9 @@ object PlanAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val sfDir = args.headOption.getOrElse(s"${PathRoot.TestData}/sf0.001")
     val outPath = if (args.length > 1) args(1)
-                  else "/root/repo/target/plan_audit.json"
+                  else s"${PathRoot.Target}/plan_audit.json"
     val only = args.drop(2).toSet
     val spark = Sessions.build(cpus = "4", logLevel = "ERROR")
     def nodeCount(p: String, name: String): Int =

@@ -30,7 +30,7 @@ object ScaleAudit {
   private val TimeoutSf1Sec = 420L
 
   def main(args: Array[String]): Unit = {
-    val outPath = args.headOption.getOrElse("/root/repo/target/scale_audit.json")
+    val outPath = args.headOption.getOrElse(s"${PathRoot.Target}/scale_audit.json")
     // args after outPath: absolute paths are sf dirs, anything else
     // selects specific queries (targeted re-runs merge into the full
     // artifact via dev/scale_table.py tooling). Classify by path shape,
@@ -38,8 +38,8 @@ object ScaleAudit {
     val only = args.drop(1).filterNot(_.startsWith("/")).toSet
     val dirArgs = args.drop(1).filter(_.startsWith("/"))
     val sfDirs = if (dirArgs.nonEmpty) dirArgs.toSeq
-                 else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1",
-                          "/root/repo/target/sf1")
+                 else Seq(s"${PathRoot.TestData}/sf0.01",
+                          s"${PathRoot.TestData}/sf0.1", s"${PathRoot.Target}/sf1")
     val spark = Sessions.build()
     @volatile var tasks = 0L
     @volatile var shufBytes = 0L

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** sf1 test-data generator for the catalog-wide scaling audit (round-11
@@ -34,11 +34,10 @@ object ScaleGen {
   private val Upper = Lower.toUpperCase
 
   def main(args: Array[String]): Unit = {
-    val src = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val dst = if (args.length > 1) args(1) else "/root/repo/target/sf1"
+    val src = args.headOption.getOrElse(s"${PathRoot.TestData}/sf0.1")
+    val dst = if (args.length > 1) args(1) else s"${PathRoot.Target}/sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
     val spark = Sessions.build()
-    import spark.implicits._
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     // SINGLE-FILE layout, exactly like the driver's testdata: several

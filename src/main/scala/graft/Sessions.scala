@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Single SparkSession recipe for every main (Bench/Verify/Smoke/Explain)
-  * — the cross-engine-parity configs (UTC, nanosAsLong) must never drift
-  * between entry points. */
+/** Single SparkSession recipe for every main, perfbench and the specs
+  * (`SparkFixture`) — the cross-engine-parity configs (UTC, nanosAsLong)
+  * must never drift between entry points. */
 object Sessions {
   def build(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
             logLevel: String = "WARN"): SparkSession = {
@@ -28,8 +28,8 @@ object Sessions {
       // is ~zero; 64 KB lets bytesPerCore drive the split count instead.
       // (On object storage at cluster scale the 4 MB default is the right
       // number — this is a deployment knob, not engine logic.)
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "65536"))
+      .config("spark.sql.files.openCostInBytes", "65536")
+      .config("spark.sql.warehouse.dir", s"${PathRoot.Target}/tmp/warehouse")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)

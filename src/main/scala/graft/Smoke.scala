@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke of the driver's entry contract: prints row count + top rows. */
 object Smoke {
   def main(args: Array[String]): Unit = {
     val spark = Sessions.build(cpus = "4", logLevel = "ERROR")
+    val docs = s"${PathRoot.TestData}/sf0.001/documents.parquet"
     val df = SparkEntry.entry(spark)
     val rows = df.collect()
     println(s"ENTRY_ROWS=${rows.length}")
@@ -13,13 +12,13 @@ object Smoke {
 
     // reference-literal output shape: top-K per reducer
     graft.operators.Tokenize.topKPerReducer(
-      spark.read.parquet("/root/testdata/sf0.001/documents.parquet"), "text",
+      spark.read.parquet(docs), "text",
       k = 3, numReducers = 4)
       .collect().foreach(r => println(s"PERREDUCER_ROW $r"))
 
     // native expression through SQL over a real scan
     graft.plans.GraftExtensions.register(spark)
-    spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    spark.read.parquet(docs)
       .createOrReplaceTempView("documents")
     spark.sql(
       """SELECT lang, encode_word(lang) AS enc, count(*) AS n

@@ -5,7 +5,7 @@ import graft.queries._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Entry-point contract — see SURVEY.md §7.
   *
   * The engine is a library of composable DataFrame operators
   * (`graft.operators.*`, `graft.functions.*`) plus this query catalog; the
@@ -20,7 +20,7 @@ object SparkEntry {
     * with count-desc/word-asc top-K (SURVEY.md §1 fine print 5 canonicalizes
     * the global merge the reference left as dead code). */
   def entry(spark: SparkSession): DataFrame = {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(s"${PathRoot.TestData}/sf0.001/documents.parquet")
     Tokenize.wordCount(docs, "text").orderBy(desc("cnt"), asc("word")).limit(20)
   }
 

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{SaveMode, SparkSession}
 
 /** Small-file compaction — the table-maintenance pass every long-running
   * pipeline needs at scale. Streaming sinks, frequent upserts, and

@@ -1,10 +1,9 @@
 package graft.queries
 
 import graft.operators.Tokenize
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.Ckpt._
 
 /** Multimodal-column + sketch + streaming-sink family — binary payload
   * decode/resize/frames/audio (real JDK codecs over batched

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.operators.Tokenize
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Ckpt._
@@ -34,7 +34,6 @@ import graft.operators.Ckpt._
   * the LSH/IVF variants.
   */
 object LlmOps extends Catalog {
-  import Tokenize.Delim
 
   // ---- minhash / shingle constants (shared Spark + SQL) ----
   private[queries] val K = 8        // char-shingle width

@@ -1,10 +1,7 @@
 package graft.queries
 
-import graft.operators.Tokenize
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.Ckpt._
 
 /** Similarity-search / representation family — brute-force ANN top-k,
   * IVF / PQ / LSH approximate variants, k-means and silhouette, TF-IDF /

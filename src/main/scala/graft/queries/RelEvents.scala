@@ -1,10 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
-import graft.operators.Ckpt._
 
 /** Event-sequence queries — sessionization (gap and window), funnels,
   * retention, transitions, concurrency, 3-sequences, and forward-fill

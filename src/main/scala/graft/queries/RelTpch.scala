@@ -1,10 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.operators.Ckpt._
 
 /** The 20-query TPC-H suite (Q2-Q22; Q1's shape is the flagship q1_agg in
   * [[Relational]]) — shape-preserving ports to the harness tables, split
@@ -12,7 +9,6 @@ import graft.operators.Ckpt._
   * live in [[Relational]] (imported below).
   */
 object RelTpch extends Catalog {
-  import Relational._
 
   val queries: Map[String, Q] = strictMap(
     // TPC-H Q3 (shipping priority): the classic dim-filter → fact-fact

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.operators.Ckpt._
 
 /** Standard relational coverage over the TPC-H-ish harness tables — the
   * categories the reference lacks entirely (SURVEY.md §2b): joins of every

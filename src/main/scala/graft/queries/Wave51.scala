@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 /** Wave-51 additions — frame-level audio and video signals through the
   * real codecs (the segmentation primitives a multimodal training
   * pipeline runs after decode):

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 /** Wave-58 addition — the three-valued-logic contract pin:
   *
   *  - q_null_semantics: one row per NULL-semantics corner case, evaluated

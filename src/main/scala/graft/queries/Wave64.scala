@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.Ckpt._
 
 /** Wave-64 additions — one matrix-factorization half-step, off-policy
   * evaluation, speculative-decoding acceptance, and an ordering audit:

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.Ckpt
 import graft.operators.Ckpt._
 
 /** Wave-66 additions — deterministic DP-release shape, a second

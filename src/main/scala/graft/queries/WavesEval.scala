@@ -1,9 +1,8 @@
 package graft.queries
 
-import graft.operators.{Ckpt, Tokenize}
+import graft.operators.Tokenize
 import graft.operators.Ckpt._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Evaluation / launch-decision / weak-supervision waves (9-32 era):

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.operators.{Ckpt, Tokenize}
+import graft.operators.Tokenize
 import graft.operators.Ckpt._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{DataFrame, SparkSession}

@@ -1,9 +1,6 @@
 package graft.queries
 
-import graft.operators.{Ckpt, Tokenize}
 import graft.operators.Ckpt._
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Nonparametric / rank hypothesis-test waves (7-15 era): the

@@ -1,9 +1,7 @@
 package graft.queries
 
-import graft.operators.{Ckpt, Tokenize}
 import graft.operators.Ckpt._
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Robust effect sizes, agreement, sampling design and corpus-estimation

@@ -198,7 +198,8 @@ package object queries {
   def hashBucketSql: String =
     s"${hex2longSql("md5(CAST(doc_id AS VARCHAR))", 1)} % 100"
 
-  /** Per-process scratch root for sink round-trip queries: two JVMs (e.g.
+  /** Per-process scratch root for sink round-trip queries, under the
+    * checkout's `target/tmp` ([[graft.PathRoot]]): two JVMs (e.g.
     * a Bench run while the driver's Verify is still writing) must not
     * overwrite each other's outputs mid-read. Within one process reruns
     * reuse (overwrite) the same directory, which is safe — evaluation is
@@ -206,7 +207,7 @@ package object queries {
     * DEAD processes so repeated dev-loop runs don't grow target/tmp
     * unboundedly (live PIDs are left alone). */
   lazy val TmpRoot: String = {
-    val root = new java.io.File("/root/repo/target/tmp")
+    val root = new java.io.File(s"${graft.PathRoot.Target}/tmp")
     val mine = s"run-${ProcessHandle.current().pid()}"
     val stale = Option(root.listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.startsWith("run-") && f.getName != mine)

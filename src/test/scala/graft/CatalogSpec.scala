@@ -38,10 +38,9 @@ class CatalogSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("all queries execute at sf0.001 and return rows") {
-    val empty = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      val n = fn(spark, Sf).count()
-      if (n == 0) Some(name) else None
-    }
+    val failed = CatalogRun.results.collect { case (n, Left(e)) => s"$n: $e" }
+    assert(failed.isEmpty, s"queries that failed: ${failed.mkString("; ")}")
+    val empty = CatalogRun.results.collect { case (n, Right(r)) if r.rows == 0 => n }
     assert(empty.isEmpty, s"queries with empty results: $empty")
   }
 

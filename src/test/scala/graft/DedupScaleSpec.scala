@@ -25,7 +25,7 @@ class DedupScaleSpec extends AnyFunSuite with SparkFixture {
       (1 to 200).map(i => (i.toLong, cluster)) ++
         Seq((201L, nearA), (202L, nearB)) ++
         (203 to 300).map(i => (i.toLong, boiler + " " + sentence(25)))
-    val out = "/root/repo/target/tmp/dedup_scale_corpus"
+    val out = s"${graft.queries.TmpRoot}/dedup_scale_corpus"
     rows.toDF("doc_id", "text")
       .select(col("doc_id"), col("text"), lit("en").as("lang"),
         lit("s" + "0").as("source"), length(col("text")).cast("long").as("n_chars"))
@@ -91,7 +91,7 @@ class DedupScaleSpec extends AnyFunSuite with SparkFixture {
         else sentence(40)
       (id, text)
     }
-    val out = "/root/repo/target/tmp/delta_dedup_corpus"
+    val out = s"${graft.queries.TmpRoot}/delta_dedup_corpus"
     rows.toDF("doc_id", "text")
       .select(col("doc_id"), col("text"), lit("en").as("lang"),
         lit("s0").as("source"), length(col("text")).cast("long").as("n_chars"))

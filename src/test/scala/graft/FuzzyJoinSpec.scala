@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.FuzzyJoin
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Completeness + plan-shape proof of the deletion-neighborhood fuzzy join

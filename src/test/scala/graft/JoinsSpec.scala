@@ -98,7 +98,8 @@ class JoinsSpec extends AnyFunSuite with SparkFixture {
     spark.sql("DROP TABLE IF EXISTS o_b")
     // the in-memory catalog forgets tables across JVMs but files persist
     for (t <- Seq("li_b", "o_b")) {
-      val d = new java.io.File(s"/root/repo/target/tmp/warehouse/$t")
+      val d = new java.io.File(new org.apache.hadoop.fs.Path(
+        spark.conf.get("spark.sql.warehouse.dir"), t).toUri.getPath)
       if (d.exists()) {
         d.listFiles().foreach(_.delete()); d.delete()
       }

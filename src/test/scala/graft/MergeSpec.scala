@@ -43,7 +43,6 @@ class MergeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("diff classifies null-KEY rows by presence, not key-null tests") {
-    import org.apache.spark.sql.functions._
     val old = Seq((Option(1L), "a"), (None: Option[Long], "n"))
       .toDF("k", "v")
     // null key present in BOTH snapshots, unchanged → must emit NOTHING

@@ -53,7 +53,6 @@ class MetricsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("q_freq_triples: anti-monotonicity — every sub-pair of a frequent triple is frequent") {
-    import org.apache.spark.sql.functions._
     val triples = SparkEntry.queries("q_freq_triples")(spark, Sf).collect()
     val pairs = SparkEntry.queries("q_freq_pairs")(spark, Sf).collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet

@@ -8,9 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * fails here instead of in production. */
 class PlanSpec extends AnyFunSuite with SparkFixture {
 
-  private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, Sf).queryExecution
-      .explainString(org.apache.spark.sql.execution.FormattedMode)
+  private def readSchema(p: String): String =
+    "ReadSchema: struct<([^>]*)>".r.findFirstMatchIn(p).map(_.group(1)).getOrElse("")
 
   test("q_join_broadcast: both dimension joins are broadcast hash joins") {
     val p = plan("q_join_broadcast")
@@ -21,11 +20,10 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
 
   test("q1_agg: scan is column-pruned to exactly the 6 needed columns") {
     val p = plan("q1_agg")
-    val readSchema = "ReadSchema: struct<([^>]*)>".r
-      .findFirstMatchIn(p).map(_.group(1)).getOrElse("")
+    val schema = readSchema(p)
     // count field NAMES (type parameters may themselves contain commas)
-    val fields = "(\\w+):".r.findAllIn(readSchema).length
-    assert(fields == 6, readSchema)
+    val fields = "(\\w+):".r.findAllIn(schema).length
+    assert(fields == 6, schema)
     // map-side partial aggregation present (partial_* agg functions in the
     // first HashAggregate — node counts are unreliable in formatted mode,
     // which prints every node twice)
@@ -87,17 +85,13 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     val p = plan("q_wordcount")
     // the tokenizer isn't pushable, but the scan must be pruned to the
     // single text column
-    val readSchema = "ReadSchema: struct<([^>]*)>".r
-      .findFirstMatchIn(p).map(_.group(1)).getOrElse("")
-    assert(readSchema == "text:string", readSchema)
+    assert(readSchema(p) == "text:string", readSchema(p))
   }
 
   test("q_scan_text: scan reads exactly the five projected columns") {
-    val p = plan("q_scan_text")
-    val readSchema = "ReadSchema: struct<([^>]*)>".r
-      .findFirstMatchIn(p).map(_.group(1)).getOrElse("")
-    val names = "(\\w+):".r.findAllMatchIn(readSchema).map(_.group(1)).toSet
-    assert(names == Set("doc_id", "lang", "source", "n_chars", "text"), readSchema)
+    val schema = readSchema(plan("q_scan_text"))
+    val names = "(\\w+):".r.findAllMatchIn(schema).map(_.group(1)).toSet
+    assert(names == Set("doc_id", "lang", "source", "n_chars", "text"), schema)
   }
 
   test("q_sql_topk: the GRAFT TOPK dialect plans as native partial+final TopKPerKeyExec") {
@@ -313,22 +307,6 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(!p.contains("CartesianProduct"), p)
   }
 
-  /** EXECUTED formatted plan: under AQE only the finalized plan carries
-    * `codegen id` annotations and the runtime join selections — the
-    * pre-execution AdaptiveSparkPlan prints neither. collect() drives the
-    * dataset's OWN QueryExecution (a write would execute a separate
-    * command plan), so the explain below reflects what actually ran. */
-  private def executedPlan(name: String): String = {
-    val df = SparkEntry.queries(name)(spark, Sf)
-    df.collect()
-    val p = df.queryExecution
-      .explainString(org.apache.spark.sql.execution.FormattedMode)
-    spark.catalog.clearCache()
-    // executed adaptive explains print final AND initial trees — count
-    // only the final one (same pruning as the PlanAudit artifact)
-    PlanAudit.finalPlanOnly(p)
-  }
-
   test("flagship + native-expression queries participate in whole-stage codegen") {
     // the flagship or a native-Expression query (EncodeWordExpression,
     // IntVecDot under q_ann_topk) silently falling off codegen is a perf
@@ -336,7 +314,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // (r11 verdict task 2)
     val lost = Seq("q_wordcount", "q1_agg", "q_encode_exact", "q_ann_topk",
                    "q_dedup_minhash")
-      .filterNot(q => executedPlan(q).contains("codegen id :"))
+      .filterNot(q => CatalogRun(q).finalPlan.contains("codegen id :"))
     assert(lost.isEmpty, s"queries that lost whole-stage codegen: $lost")
   }
 
@@ -346,8 +324,8 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // crossings (q_ann_topk's k-row non-equi query broadcast, q_tfidf's
     // 1-row global doc-count carrier); every equi-join family pins 0 so
     // a join degradation shows up as a CI diff, not a bench mystery
-    // (r11 verdict task 3). Counted on the EXECUTED plan — AQE's final
-    // join selection, same counter as PlanAudit's `bnlj` field.
+    // (r11 verdict task 3). Counted on the EXECUTED plan (CatalogRun) —
+    // AQE's final join selection, same counter as PlanAudit's `bnlj` field.
     val pins = Seq(
       "q_wordcount" -> 0, "q1_agg" -> 0, "q_join_broadcast" -> 0,
       "q_join_sortmerge" -> 0, "q_join_semi" -> 0, "q_join_anti" -> 0,
@@ -358,7 +336,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       "q_ann_topk" -> 1) // the constant-k broadcast query-set crossing
     val bad = pins.flatMap { case (q, want) =>
       val n = "\\(\\d+\\) BroadcastNestedLoopJoin".r
-        .findAllIn(executedPlan(q)).length
+        .findAllIn(CatalogRun(q).finalPlan).length
       if (n == want) None else Some(s"$q: expected $want BNLJ, got $n")
     }
     assert(bad.isEmpty, bad.mkString("; "))
@@ -373,18 +351,10 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // canonical 100 TB scale-killer) appearing in a flagship family
     // fails CI instead of surfacing as a bench mystery. The structural
     // walk (GraftSqlShim.unboundedGlobalWindows) runs on the EXECUTED
-    // plan and descends through AQE wrappers, query stages and cached
-    // relations. Sink/side-effecting headline queries are exercised via
-    // their own specs + the PlanAudit artifact (collect() here would
-    // re-run their writes).
-    val skip = Set("q_sink_roundtrip", "q_sink_csv_roundtrip",
-      "q_sink_json_roundtrip", "q_partitioned_scan", "q_upsert")
-    val bad = Bench.Headline.toSeq.sorted.filterNot(skip).flatMap { q =>
-      val df = SparkEntry.queries(q)(spark, Sf)
-      df.collect()
-      val n = org.apache.spark.sql.graft.GraftSqlShim.unboundedGlobalWindows(
-        df.queryExecution.executedPlan)
-      spark.catalog.clearCache()
+    // plan (CatalogRun) and descends through AQE wrappers, query stages
+    // and cached relations.
+    val bad = Bench.Headline.toSeq.sorted.flatMap { q =>
+      val n = CatalogRun(q).unboundedGlobalWindows
       if (n == 0) None else Some(s"$q: $n")
     }
     assert(bad.isEmpty, s"unbounded global windows in: $bad")
@@ -393,23 +363,12 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   test("catalog-wide: no query plans a CartesianProduct") {
     // 1-row stat-assembly crossjoins plan as BroadcastNestedLoopJoin and
     // are fine; an actual CartesianProduct (both sides big, no key) is
-    // always a bug at scale. Sink/side-effecting queries are skipped —
-    // planning them runs their writes; their shapes are covered by their
-    // own specs and the verify gate.
-    val skip = Set("q_sink_roundtrip", "q_sink_text_roundtrip",
-      "q_sink_csv_roundtrip", "q_sink_json_roundtrip", "q_sink_orc_roundtrip",
-      "q_sink_xml_roundtrip",
-      "q_sink_nested_roundtrip", "q_stream_synth",
-      "q_csv_corrupt", "q_partitioned_scan", "q_partition_overwrite",
-      "q_compact", "q_join_bucketed", "q_upsert",
-      "q_cdc_apply", "q_schema_evolution", "q_synth_source", "q_dpp",
-      "q_stream_join_sink", "q_checksum_sink")
-    val offenders = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(skip)
-      .filter { name =>
-        try plan(name).contains("CartesianProduct")
-        catch { case e: Throwable => fail(s"$name failed to plan: $e") }
-      }
+    // always a bug at scale. Reads the whole EXECUTED explain
+    // (CatalogRun), so both AQE's final and initial trees are checked.
+    val offenders = CatalogRun.results.toSeq.sortBy(_._1).collect {
+      case (name, Left(e)) => fail(s"$name failed: $e")
+      case (name, Right(r)) if r.explain.contains("CartesianProduct") => name
+    }
     assert(offenders.isEmpty, s"CartesianProduct in: $offenders")
   }
 }

@@ -1,20 +1,15 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.{BeforeAndAfterAll, Suite}
 
-/** Shared local session for specs (getOrCreate → one JVM-wide session). */
-trait SparkFixture extends BeforeAndAfterAll { this: Suite =>
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.sql.warehouse.dir", "/root/repo/target/tmp/warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+/** Shared local session for specs: the shipped recipe at width 4
+  * (getOrCreate → one JVM-wide session). */
+trait SparkFixture {
+  lazy val spark: SparkSession = Sessions.build(cpus = "4")
 
-  val Sf = "/root/testdata/sf0.001"
+  val Sf = s"${PathRoot.TestData}/sf0.001"
+
+  /** A catalog query's formatted explain, built but not executed. */
+  def plan(name: String): String = SparkEntry.queries(name)(spark, Sf)
+    .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
 }

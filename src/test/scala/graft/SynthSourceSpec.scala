@@ -67,7 +67,7 @@ class SynthSourceSpec extends AnyFunSuite with SparkFixture {
     val q = spark.readStream.format("graft.sources.SynthSource")
       .option("rows", "1000").option("partitions", "3")
       .option("rowsPerBatch", "300").load()
-    val chk = s"/root/repo/target/tmp/synth_stream_chk_${System.nanoTime()}"
+    val chk = s"${graft.queries.TmpRoot}/synth_stream_chk_${System.nanoTime()}"
     val query = q.writeStream.format("memory").queryName("synth_stream")
       .option("checkpointLocation", chk).start()
     try {

@@ -12,10 +12,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class TpchSuiteSpec extends AnyFunSuite with SparkFixture {
 
-  private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, Sf).queryExecution
-      .explainString(org.apache.spark.sql.execution.FormattedMode)
-
   test("q6: zero joins, every predicate pushed to the parquet scan") {
     val p = plan("q_tpch_q6")
     assert(!p.contains("Join"), p)

@@ -31,10 +31,10 @@ class VerifyForensicsSpec extends AnyFunSuite with SparkFixture {
   test("an intentional planted mismatch produces the verify_diff file") {
     import scala.sys.process._
     val diff = new java.io.File(
-      "/root/repo/target/verify_diff/selftest_planted.txt")
+      s"${PathRoot.Target}/verify_diff/selftest_planted.txt")
     if (diff.exists()) diff.delete()
     val rc = Process(Seq("python3", "dev/check.py", "--selftest"),
-      new java.io.File("/root/repo")).!
+      new java.io.File(PathRoot.Checkout)).!
     assert(rc == 0, s"check.py --selftest exit $rc")
     assert(diff.exists(), "diff file not produced")
     val txt = new String(java.nio.file.Files.readAllBytes(diff.toPath), "UTF-8")

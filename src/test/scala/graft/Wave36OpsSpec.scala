@@ -32,7 +32,7 @@ class Wave36OpsSpec extends AnyFunSuite with SparkFixture {
       (1 to 100).map(i => (i.toLong, vecA, 1)) ++
         Seq((201L, vecB, 2), (202L, vecB, 2)) ++
         (301 to 320).map(k => (k.toLong, distract(k), 2))
-    val out = "/root/repo/target/tmp/wave36_embeddings"
+    val out = s"${graft.queries.TmpRoot}/wave36_embeddings"
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
     out

@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.Wave41
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Invariant pins for the wave-41 queries at sf0.001. */

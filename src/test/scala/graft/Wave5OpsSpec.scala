@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Hits
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** In-memory cross-checks for the HITS / DTW / RBO additions on arbitrary

@@ -34,7 +34,6 @@ class Wave8OpsSpec extends AnyFunSuite with SparkFixture {
 
   test("dsir_select: no target-slice docs selected, scores " +
     "non-increasing, feature count bounded by word count") {
-    import org.apache.spark.sql.functions._
     val rows = SparkEntry.queries("q_dsir_select")(spark, Sf).collect()
     assert(rows.nonEmpty)
     val srcOf = spark.read.parquet(s"$Sf/documents.parquet")

@@ -43,7 +43,6 @@ class Wave9OpsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("kendall: tau in [-1, 1], pair counts conserve, n0 = D(D-1)/2") {
-    import org.apache.spark.sql.functions._
     val r = SparkEntry.queries("q_kendall")(spark, Sf).collect().head
     val (n0, c, d, tx, ty) = (r.getLong(0), r.getLong(1), r.getLong(2),
       r.getLong(3), r.getLong(4))
