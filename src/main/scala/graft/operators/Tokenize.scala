@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.plans.{KeepToken, KeptTokens}
+import graft.plans.{GraftExtensions, KeepToken, KeptTokens, TokenCounts, TokenCountsStrategy}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftSqlShim
@@ -25,11 +25,15 @@ import org.apache.spark.sql.graft.GraftSqlShim
   * Scale notes: tokenize is a narrow map (no shuffle) done by one native
   * expression, `explode(kept_tokens(text))` — a byte scan that splits and
   * applies the keep rule in a single pass, with no regex, no `lower` copy
-  * and no Filter node. wordCount compiles to scan → Generate → partial
-  * HashAggregate (one whole-stage-codegen stage) → single Exchange on
-  * `word` → final HashAggregate. Map-side partial aggregation is a strict
-  * improvement over the reference's per-occurrence network send
-  * (`ListenerReducer.java:123-139`) with identical results.
+  * and no Filter node. wordCount does not build token rows at all: it
+  * compiles to scan → `TokenCountsExec` (the same scan, each kept token
+  * hashed from its bytes into a per-task count table — in-mapper
+  * combining) → partial `sum` → single Exchange on `word` → final `sum`.
+  * The table's memory is bounded by a fixed per-task byte budget: when it
+  * is reached the table is emitted as partial counts and cleared, and the
+  * `sum` downstream merges them. The shuffle carries one row per distinct
+  * word per task, against the reference's per-occurrence network send
+  * (`ListenerReducer.java:123-139`), with identical results.
   */
 object Tokenize {
   /** `WorkerSender.java:216` delimiter class (Java & RE2 compatible). */
@@ -61,10 +65,19 @@ object Tokenize {
   def fingerprint(text: Column): Column =
     md5(concat_ws(" ", array_sort(array_distinct(tokenArray(text)))))
 
-  /** Global word count: (word, cnt), single shuffle, partial agg map-side. */
-  def wordCount(df: DataFrame, textCol: String): DataFrame =
-    tokenize(df.select(col(textCol)), textCol)
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
+  /** Global word count: (word, cnt) over the kept tokens of `textCol`.
+    * Each task counts its own tokens ([[graft.plans.TokenCounts]]), then one
+    * shuffle on `word` and a `sum` give the exact counts. */
+  def wordCount(df: DataFrame, textCol: String): DataFrame = {
+    val spark = df.sparkSession
+    GraftExtensions.useStrategy(spark, TokenCountsStrategy)
+    val plan = df.select(col(textCol)).queryExecution.analyzed
+    val text = plan.output.head
+    require(text.dataType == org.apache.spark.sql.types.StringType,
+      s"wordCount expects a STRING column, $textCol is ${text.dataType.catalogString}")
+    GraftSqlShim.ofRows(spark, TokenCounts(text, plan))
+      .groupBy("word").agg(sum("cnt").as("cnt"))
+  }
 
   /** The reference's literal output shape: top-K PER REDUCER
     * (`WorkerSender.java:26,286-296` — each worker sorts and prints its own

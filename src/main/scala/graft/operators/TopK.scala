@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.plans.{TopKPerKey, TopKStrategy}
+import graft.plans.{GraftExtensions, TopKPerKey, TopKStrategy}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
 
@@ -25,9 +25,7 @@ object TopK {
     val so = ordering.map { case (n, asc) =>
       SortOrder(attr(n), if (asc) Ascending else Descending) }
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
+    GraftExtensions.useStrategy(spark, TopKStrategy)
     org.apache.spark.sql.graft.GraftSqlShim.ofRows(
       spark, TopKPerKey(keys, so, k, plan))
   }

@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.functions.call_function
 
 /** Session extension registering graft's native expressions, so that
@@ -30,6 +31,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => EncodeWordSimplification)
     ext.injectOptimizerRule(_ => SummaryRewrite)
     ext.injectPlannerStrategy(_ => TopKStrategy)
+    ext.injectPlannerStrategy(_ => TokenCountsStrategy)
     // parser tier: the GRAFT TOPK dialect (only effective when the session
     // is BUILT with spark.sql.extensions=graft.plans.GraftExtensions — the
     // parser is baked into sessionState at construction, so the imperative
@@ -331,10 +333,16 @@ object GraftExtensions {
     if (!spark.experimental.extraOptimizations.contains(SummaryRewrite))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ SummaryRewrite
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
+    useStrategy(spark, TopKStrategy)
+    useStrategy(spark, TokenCountsStrategy)
   }
+
+  /** Adds `strategy` to the session's planner unless it is there already:
+    * how a native logical node plans on a session built without
+    * `spark.sql.extensions`. */
+  def useStrategy(spark: SparkSession, strategy: SparkStrategy): Unit =
+    if (!spark.experimental.extraStrategies.contains(strategy))
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ strategy
 
   /** Column API over the registered function. */
   def encode_word(c: Column): Column = call_function("encode_word", c)

@@ -8,6 +8,8 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
+import java.nio.charset.StandardCharsets
+
 /** The word-count map kernel: the reference tokenizer and keep rule
   * ([[graft.operators.Tokenize]]) as one scan over a string.
   *
@@ -19,11 +21,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * `KeptTokensSpec` pins both facts against the regex formulation and
   * the session's own `lower`.
   *
-  * Full-ASCII input is scanned as bytes through a 128-entry class table;
-  * only kept tokens are copied out. Any other input is decoded the way
-  * Spark's `split` decodes it (`UTF8String.toString`, malformed bytes →
-  * U+FFFD) and scanned as chars, so its tokens are byte-identical to the
-  * regex path's.
+  * Full-ASCII input is scanned as bytes through a 128-entry class table,
+  * and each kept token is handed on as a slice of the input. Any other
+  * input is decoded the way Spark's `split` decodes it
+  * (`UTF8String.toString`, malformed bytes → U+FFFD) and scanned as chars,
+  * so its tokens are byte-identical to the regex path's. [[foreachKept]]
+  * is that one scan; `kept_tokens` copies its tokens into an array and
+  * [[TokenCountsExec]] counts them in place.
   */
 object TokenKernel {
   private final val Other = 0
@@ -46,51 +50,50 @@ object TokenKernel {
     else if (c == '\u0130' || c == '\u212A') Keep
     else Other
 
-  /** The kept tokens of `text`, in order. */
-  def keptTokens(text: UTF8String): ArrayData = {
+  /** Receives kept tokens as byte slices. A slice may point into the
+    * text's own buffer, so it is valid only during the call. */
+  trait Sink {
+    def token(base: AnyRef, offset: Long, numBytes: Int): Unit
+  }
+
+  /** Feeds the kept tokens of `text` to `sink`, in order, and returns how
+    * many there were. */
+  def foreachKept(text: UTF8String, sink: Sink): Int = {
     val base = text.getBaseObject
     val off = text.getBaseOffset
     val n = text.numBytes
-    // pass 1: count kept tokens, bailing out on the first non-ASCII byte
+    if (!isAscii(base, off, n)) return foreachDecoded(text.toString, sink)
     var kept = 0
-    var hasKeep = false
     var i = 0
     while (i < n) {
-      val b = Platform.getByte(base, off + i)
-      if (b < 0) return decoded(text.toString)
-      val c = AsciiClass(b)
-      if (c == Delim) { if (hasKeep) kept += 1; hasKeep = false }
-      else if (c == Keep) hasKeep = true
-      i += 1
-    }
-    if (hasKeep) kept += 1
-    // pass 2: copy the kept tokens out
-    val out = new Array[Any](kept)
-    var k = 0
-    i = 0
-    while (k < kept) {
-      // a kept token lies ahead, so this skip stops before n
-      while (AsciiClass(Platform.getByte(base, off + i)) == Delim) i += 1
+      while (i < n && AsciiClass(Platform.getByte(base, off + i)) == Delim) i += 1
       val start = i
-      hasKeep = false
+      var hasKeep = false
       var c = Other
       while (i < n && { c = AsciiClass(Platform.getByte(base, off + i)); c != Delim }) {
         if (c == Keep) hasKeep = true
         i += 1
       }
-      if (hasKeep) {
-        val bytes = new Array[Byte](i - start)
-        Platform.copyMemory(base, off + start, bytes, Platform.BYTE_ARRAY_OFFSET,
-          bytes.length)
-        out(k) = UTF8String.fromBytes(bytes)
-        k += 1
-      }
+      if (hasKeep) { sink.token(base, off + start, i - start); kept += 1 }
     }
-    new GenericArrayData(out)
+    kept
   }
 
-  private def decoded(s: String): ArrayData = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+  private def isAscii(base: AnyRef, off: Long, n: Int): Boolean = {
+    var i = 0
+    if (Platform.unaligned()) while (i + 8 <= n) {
+      if ((Platform.getLong(base, off + i) & 0x8080808080808080L) != 0) return false
+      i += 8
+    }
+    while (i < n) {
+      if (Platform.getByte(base, off + i) < 0) return false
+      i += 1
+    }
+    true
+  }
+
+  private def foreachDecoded(s: String, sink: Sink): Int = {
+    var kept = 0
     val n = s.length
     var i = 0
     while (i < n) {
@@ -102,8 +105,23 @@ object TokenKernel {
         if (c == Keep) hasKeep = true
         i += 1
       }
-      if (hasKeep) out += UTF8String.fromString(s.substring(start, i))
+      if (hasKeep) {
+        val bytes = s.substring(start, i).getBytes(StandardCharsets.UTF_8)
+        sink.token(bytes, Platform.BYTE_ARRAY_OFFSET, bytes.length)
+        kept += 1
+      }
     }
+    kept
+  }
+
+  /** The kept tokens of `text`, in order. */
+  def keptTokens(text: UTF8String): ArrayData = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    foreachKept(text, (base, offset, numBytes) => {
+      val bytes = new Array[Byte](numBytes)
+      Platform.copyMemory(base, offset, bytes, Platform.BYTE_ARRAY_OFFSET, numBytes)
+      out += UTF8String.fromBytes(bytes)
+    })
     new GenericArrayData(out.toArray)
   }
 

@@ -414,9 +414,8 @@ object Analytics extends Catalog {
     // sums + terminal divisions. A 10⁹-type vocabulary never sorts on
     // one task.
     "q_vocab_coverage" -> ((s, dir) => {
-      val wc = corpusToks(s, dir).groupBy("word")
-        .agg(count(lit(1)).as("c"))
-        .selectExpr("word", "c", "-c AS nc").withColumn("k", lit(1))
+      val wc = corpusWordCount(s, dir)
+        .selectExpr("word", "cnt AS c", "-cnt AS nc").withColumn("k", lit(1))
       graft.operators.Ranks.withinKey(wc, "k", Seq("nc", "word"))
         .agg(count(lit(1)).as("vocab_size"), sum("c").as("total_tokens"),
           sum(when(col("rk") <= 100, col("c")).otherwise(0L)).as("c100"),

@@ -961,8 +961,8 @@ object LlmOps extends Catalog {
     // aggregates map-side and shuffles only |docs| rows.
     "q_vocab_oov" -> ((s, dir) => {
       val toks = corpusToks(s, dir)
-      val vocab = toks.groupBy("word").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("word").asc).limit(VocabSize)
+      val vocab = corpusWordCount(s, dir)
+        .orderBy(col("cnt").desc, col("word").asc).limit(VocabSize)
         .select(col("word"), lit(1L).as("in_v"))
       toks.join(broadcast(vocab), Seq("word"), "left")
         .groupBy("doc_id")
@@ -1474,7 +1474,7 @@ object LlmOps extends Catalog {
     // re-executes ~2× per round (plan audit: 19 Exchanges on the
     // fertility consumer before)
     import graft.operators.Ckpt._
-    val wc0 = toks(s, dir).groupBy("word").agg(count(lit(1)).as("cnt"))
+    val wc0 = corpusWordCount(s, dir)
       .withColumn("seq", concat(lit(" "),
         regexp_replace(col("word"), "(.)", "$1 ")))
       .ckpt()

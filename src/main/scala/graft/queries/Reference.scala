@@ -34,10 +34,6 @@ object Reference extends Catalog {
       "THEN lpad(CAST(strpos('`abcdefghijklmnopqrstuvwxyz', c) - 1 AS VARCHAR), 2, '0') " +
       "ELSE '' END), '')"
 
-  /** Word count (O6+O7): single shuffle with map-side partial aggregation. */
-  private def wordcount(s: SparkSession, dir: String): DataFrame =
-    toks(s, dir).groupBy("word").agg(count(lit(1)).as("cnt"))
-
   private val WordcountSql =
     s"""WITH $ToksSql
        |SELECT word, count(*) AS cnt FROM toks GROUP BY word
@@ -77,7 +73,7 @@ object Reference extends Catalog {
     }),
     // O6+O7: the flagship word count (shuffle + hash aggregate).
     "q_wordcount" -> ((s, dir) =>
-      wordcount(s, dir).orderBy(desc("cnt"), asc("word"))),
+      corpusWordCount(s, dir).orderBy(desc("cnt"), asc("word"))),
     // The reference's LITERAL output shape: top-20 per reducer, reducer
     // identity = BigInteger(encode(word)) mod 4 (`WorkerSender.java:
     // 223-224,286-296`) — deterministic and partitioning-independent, so
@@ -95,20 +91,20 @@ object Reference extends Catalog {
         .orderBy(desc("v"), asc("event_id"))),
     // O9: top-K → TakeOrderedAndProject (no full sort materialization).
     "q_topk" -> ((s, dir) =>
-      wordcount(s, dir).orderBy(desc("cnt"), asc("word")).limit(20)),
+      corpusWordCount(s, dir).orderBy(desc("cnt"), asc("word")).limit(20)),
     // O14: distinct keyset.
     "q_distinct" -> ((s, dir) =>
       toks(s, dir).select("word").distinct().orderBy("word")),
     // O11: file sink round-trip (write parquet, read back).
     "q_sink_roundtrip" -> ((s, dir) => {
       val out = s"$TmpRoot/q_sink_roundtrip"
-      wordcount(s, dir).write.mode("overwrite").parquet(out)
+      corpusWordCount(s, dir).write.mode("overwrite").parquet(out)
       s.read.parquet(out).orderBy(desc("cnt"), asc("word"))
     }),
     // CSV source/sink round-trip (schema-on-read with explicit schema).
     "q_sink_csv_roundtrip" -> ((s, dir) => {
       val out = s"$TmpRoot/q_sink_csv"
-      wordcount(s, dir).write.mode("overwrite")
+      corpusWordCount(s, dir).write.mode("overwrite")
         .option("header", "true").csv(out)
       s.read.schema("word STRING, cnt BIGINT").option("header", "true")
         .csv(out).orderBy(desc("cnt"), asc("word"))
@@ -116,7 +112,7 @@ object Reference extends Catalog {
     // JSON-lines source/sink round-trip.
     "q_sink_json_roundtrip" -> ((s, dir) => {
       val out = s"$TmpRoot/q_sink_json"
-      wordcount(s, dir).write.mode("overwrite").json(out)
+      corpusWordCount(s, dir).write.mode("overwrite").json(out)
       s.read.schema("word STRING, cnt BIGINT").json(out)
         .orderBy(desc("cnt"), asc("word"))
     }),
@@ -124,7 +120,7 @@ object Reference extends Catalog {
     // schema-on-read with an explicit schema so cnt comes back BIGINT.
     "q_sink_xml_roundtrip" -> ((s, dir) => {
       val out = s"$TmpRoot/q_sink_xml"
-      wordcount(s, dir).write.mode("overwrite")
+      corpusWordCount(s, dir).write.mode("overwrite")
         .option("rowTag", "row").format("xml").save(out)
       s.read.schema("word STRING, cnt BIGINT").option("rowTag", "row")
         .format("xml").load(out).orderBy(desc("cnt"), asc("word"))
@@ -132,7 +128,7 @@ object Reference extends Catalog {
     // ORC source/sink round-trip (the second columnar format Spark ships).
     "q_sink_orc_roundtrip" -> ((s, dir) => {
       val out = s"$TmpRoot/q_sink_orc"
-      wordcount(s, dir).write.mode("overwrite").orc(out)
+      corpusWordCount(s, dir).write.mode("overwrite").orc(out)
       s.read.orc(out).orderBy(desc("cnt"), asc("word"))
     }),
     // Text source/sink round-trip: the reference's native format
@@ -142,7 +138,7 @@ object Reference extends Catalog {
     // back as a line break — silent row corruption otherwise).
     "q_sink_text_roundtrip" -> ((s, dir) => {
       val out = s"$TmpRoot/q_sink_text"
-      wordcount(s, dir)
+      corpusWordCount(s, dir)
         .where(!col("word").rlike("[\\r\\n]"))
         .select(concat_ws("\t", col("word"), col("cnt")).as("value"))
         .write.mode("overwrite").text(out)
@@ -163,7 +159,7 @@ object Reference extends Catalog {
     // wordcount cardinality — nothing dropped or double-counted), and
     // the partitioning-invariance pin.
     "q_checksum_sink" -> ((s, dir) => {
-      val wc = wordcount(s, dir)
+      val wc = corpusWordCount(s, dir)
       // sink names carry a per-invocation nonce (round-11 ADVICE): the
       // ChecksumSink result registry is JVM-global, so two concurrent
       // builds of this query under fixed names would race on result()

@@ -32,8 +32,7 @@ object Wave46 extends Catalog {
     // 16-way broadcast crossing — (distinct words)×16 rows, partial-agg'd
     // into 16 signed sums. Never touches raw token occurrences twice.
     "q_sketch_ams_f2" -> ((s, dir) => {
-      val wc = corpusToks(s, dir)
-        .groupBy("word").agg(count(lit(1)).as("f"))
+      val wc = corpusWordCount(s, dir).withColumnRenamed("cnt", "f")
       val js = broadcast(s.range(0, AmsK).select(col("id").as("j")))
       val signed = wc.crossJoin(js)
         .withColumn("sgn", expr(

@@ -44,8 +44,7 @@ object Wave47 extends Catalog {
     // the cell table. CMS cells recompute from the same crossing (shared
     // ckpt), so the contrast is apples-to-apples on one pass.
     "q_count_sketch" -> ((s, dir) => {
-      val wc = corpusToks(s, dir)
-        .groupBy("word").agg(count(lit(1)).as("f"))
+      val wc = corpusWordCount(s, dir).withColumnRenamed("cnt", "f")
         .ckpt() // sketched + probed
       val js = broadcast(s.range(0, CsDepth).select(col("id").as("j")))
       val crossed = wc.crossJoin(js)

@@ -44,8 +44,7 @@ object Wave66 extends Catalog {
   val queries: Map[String, Q] = strictMap(
 
     "q_dp_topk" -> ((s, dir) => {
-      val wc = corpusToks(s, dir).groupBy("word")
-        .agg(count(lit(1)).as("cnt"))
+      val wc = corpusWordCount(s, dir)
         .withColumn("noise", expr(
           "CAST(conv(substring(md5(concat('dp:', word)), 1, 8), 16, 10) AS BIGINT) % 2001 - 1000"))
         .withColumn("score", col("cnt") * 100 + col("noise"))

@@ -453,8 +453,7 @@ object Wave18 extends Catalog {
     // with high r²; a templated corpus shows up immediately as a
     // flat head or a broken fit.
     "q_zipf_fit" -> ((s, dir) => {
-      val wc = corpusToks(s, dir)
-        .groupBy("word").agg(count(lit(1)).as("cnt"))
+      val wc = corpusWordCount(s, dir)
       val top = wc.orderBy(desc("cnt"), asc("word")).limit(ZipfTopN)
       val pts = top
         .withColumn("rk",

@@ -233,4 +233,9 @@ package object queries {
     graft.operators.Tokenize
       .tokenize(wideTable(s, dir, "documents").select("doc_id", "text"), "text")
       .select("doc_id", "word")
+
+  /** The corpus word count (word, cnt): `Tokenize.wordCount` over the
+    * [[wideTable]] corpus, so no token rows are built. */
+  def corpusWordCount(s: SparkSession, dir: String): DataFrame =
+    graft.operators.Tokenize.wordCount(wideTable(s, dir, "documents"), "text")
 }

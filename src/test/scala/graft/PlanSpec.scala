@@ -41,11 +41,11 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(p.contains("TakeOrderedAndProject"), p)
   }
 
-  test("q_topk: the map stage is one codegen span, explode(kept_tokens) into a partial aggregate") {
-    import org.apache.spark.sql.catalyst.expressions.{Explode, Lower, RLike, StringSplit}
+  test("q_topk: the map stage is one TokenCountsExec over the scan") {
+    import org.apache.spark.sql.catalyst.expressions.{Lower, RLike, StringSplit}
     import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
-    import org.apache.spark.sql.execution.{FilterExec, GenerateExec, ProjectExec,
-      SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, GenerateExec,
+      InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.aggregate.HashAggregateExec
     val df = SparkEntry.queries("q_topk")(spark, Sf)
@@ -55,27 +55,23 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       case q: QueryStageExec => nodes(q.plan)
       case other => other.children.flatMap(nodes)
     })
-    // the codegen span that holds the tokenizer: within one
-    // WholeStageCodegenExec, `children` stop at the stage's inputs
-    val spans = nodes(df.queryExecution.executedPlan).collect {
-      case w: WholeStageCodegenExec if w.exists(_.isInstanceOf[GenerateExec]) => w
+    // through the scan's row transition and its codegen span
+    def input(p: SparkPlan): SparkPlan = p match {
+      case _: WholeStageCodegenExec | _: InputAdapter | _: ColumnarToRowExec | _: ProjectExec =>
+        input(p.children.head)
+      case other => other
     }
-    assert(spans.size == 1, spans.mkString("\n"))
-    val span = spans.head
-    val gen = span.collect { case g: GenerateExec => g }
-    assert(gen.size == 1, span)
-    gen.head.generator match {
-      case Explode(graft.plans.KeptTokens(_)) =>
-      case other => fail(s"map phase generator is $other, not explode(kept_tokens)")
-    }
-    val partial = span.collect {
-      case h: HashAggregateExec if h.child == gen.head ||
-          h.child.isInstanceOf[ProjectExec] && h.child.children == Seq(gen.head) => h
+    val all = nodes(df.queryExecution.executedPlan)
+    val counts = all.collect { case t: graft.plans.TokenCountsExec => t }
+    assert(counts.size == 1, all.head)
+    assert(input(counts.head.child).isInstanceOf[FileSourceScanExec], counts.head)
+    val partial = all.collect {
+      case h: HashAggregateExec if input(h.child) == counts.head => h
     }
     assert(partial.size == 1 && partial.head.aggregateExpressions.forall(_.mode == Partial),
-      span)
-    assert(!span.exists(_.isInstanceOf[FilterExec]), span)
-    val regexPath = span.flatMap(_.expressions.flatMap(_.collect {
+      all.head)
+    assert(!all.exists(_.isInstanceOf[GenerateExec]), all.head)
+    val regexPath = all.flatMap(_.expressions.flatMap(_.collect {
       case e @ (_: RLike | _: StringSplit | _: Lower) => e
     }))
     assert(regexPath.isEmpty, regexPath)
