@@ -88,23 +88,19 @@ object Tokenize {
     * `spark_partition_id` would NOT be a faithful reducer id). Keysets per
     * reducer are disjoint, counts are exact; only the top-K *selection* is
     * local. Returns (reducer, word, cnt). The flagship uses the global
-    * top-K. */
+    * top-K.
+    *
+    * The selection is the native [[TopK.perKey]] (cnt desc, word asc — the
+    * reference's ValueThenKeyComparator; words are unique, so the order is
+    * total): each word-count partition keeps its best k rows per reducer,
+    * one exchange on `reducer` carries at most k rows per reducer per
+    * partition, and a final prune keeps k — never a full sort of a
+    * reducer's keyset. */
   def topKPerReducer(df: DataFrame, textCol: String, k: Int = 20,
                      numReducers: Int = 4): DataFrame = {
-    import df.sparkSession.implicits._
-    val wc = wordCount(df, textCol)
-      .withColumn("reducer",
-        graft.functions.EncodeWord.routeUdf(col("word"), lit(numReducers)))
-    // bounded-memory groupwise top-K (O(k) state per reducer) — a window
-    // row_number formulation would fully sort each reducer's keyset
-    val topk = new graft.functions.TopKWords(k)
-    wc.select(col("reducer"), col("word"), col("cnt"))
-      .as[(Int, String, Long)]
-      .groupByKey(_._1)
-      .agg(topk.toColumn)
-      .flatMap { case (reducer, items) =>
-        items.map(w => (reducer, w.word, w.cnt))
-      }
-      .toDF("reducer", "word", "cnt")
+    val routed = wordCount(df, textCol).select(
+      graft.functions.EncodeWord.routeUdf(col("word"), lit(numReducers)).as("reducer"),
+      col("word"), col("cnt"))
+    TopK.perKey(routed, Seq("reducer"), Seq("cnt" -> false, "word" -> true), k)
   }
 }

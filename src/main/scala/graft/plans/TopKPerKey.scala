@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, RowOrde
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 
 /** Whole-operator extension tier (SURVEY.md §7: custom `LogicalPlan` +
   * `SparkStrategy` + `SparkPlan`): group-wise top-K as a native physical
@@ -19,10 +20,9 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * top-k's, so each map partition forwards ≤ k rows per key) and a final
   * per-key prune after the shuffle. Memory is O(keys·k) per task and the
   * shuffle carries ≤ k rows per key per map partition — the same shape that
-  * makes partial aggregation scale, applied to selection. The typed
-  * `functions.TopKWords` Aggregator expresses the same idea over Dataset
-  * rows; this is the engine-level variant: UnsafeRow in, UnsafeRow out, no
-  * encoder boxing, usable from any DataFrame.
+  * makes partial aggregation scale, applied to selection. UnsafeRow in,
+  * UnsafeRow out, no encoder boxing, usable from any DataFrame
+  * (`operators.TopK.perKey`; the word count's top-K per reducer runs on it).
   */
 case class TopKPerKey(keys: Seq[Expression], ordering: Seq[SortOrder],
                       k: Int, child: LogicalPlan) extends UnaryNode {
@@ -46,6 +46,11 @@ case class TopKPerKeyExec(keys: Seq[Expression], ordering: Seq[SortOrder],
   override def output: Seq[Attribute] = child.output
   override def outputPartitioning: Partitioning = child.outputPartitioning
 
+  // rows kept by this stage: after the partial stage, what the exchange
+  // carries; after the final stage, the answer
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+
   // Float keys must group -0.0 with 0.0 and all NaN bit patterns together
   // (the semantics Window/Aggregate get from the NormalizeFloatingNumbers
   // rule, which doesn't know this node): normalize both the shuffle keys
@@ -67,6 +72,7 @@ case class TopKPerKeyExec(keys: Seq[Expression], ordering: Seq[SortOrder],
   override protected def doExecute(): RDD[InternalRow] = {
     val (ks, so, out, kk) = (normalizedKeys, ordering, child.output, k)
     val maxKeys = maxKeysInMemory
+    val numOutputRows = longMetric("numOutputRows")
     child.execute().mapPartitions({ iter =>
       // codegen'd projections/orderings are created per partition — they
       // are not serializable, only their expression trees are
@@ -139,7 +145,7 @@ case class TopKPerKeyExec(keys: Seq[Expression], ordering: Seq[SortOrder],
             }
           }
         }
-      inMem ++ spilled
+      (inMem ++ spilled).map { r => numOutputRows += 1; r }
     }, preservesPartitioning = true)
   }
 

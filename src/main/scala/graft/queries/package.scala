@@ -42,9 +42,19 @@ package object queries {
   /** Load a harness table. `events.ts` is nanosecond parquet, which Spark
     * only reads as long (spark.sql.legacy.parquet.nanosAsLong) — convert to
     * a microsecond TimestampType here so queries see a timestamp column
-    * (DuckDB reads the same file natively as TIMESTAMP_NS). */
+    * (DuckDB reads the same file natively as TIMESTAMP_NS).
+    *
+    * A single-file table is read with the schema of its cached footer
+    * ([[parquetFooterMeta]]), converted under the session's parquet confs
+    * on every call: the schema `spark.read.parquet` would infer, without
+    * the schema-inference Spark job it runs while the query is built.
+    * Directory tables, schema merging and an unreadable footer take the
+    * inferring read. */
   def table(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val schema = parquetFooterMeta(s, path).flatMap(_.footer)
+      .flatMap(org.apache.spark.sql.graft.GraftSqlShim.parquetFooterSchema(s, _))
+    val df = schema.fold(s.read.parquet(path))(s.read.schema(_).parquet(path))
     if (name == "events") normalizeTs(df) else df
   }
 
@@ -76,6 +86,7 @@ package object queries {
   def wideTable(s: SparkSession, dir: String, name: String): DataFrame = {
     val df = table(s, dir, name)
     val (groups, bytes) = parquetFooterMeta(s, s"$dir/$name.parquet")
+      .fold(NoWiden)(m => (m.rowGroups, m.bytes))
     // Tables outside the hard-coded key map (unexpected at the harness
     // call sites, but reachable from tests) spread round-robin.
     graft.operators.Ckpt.widenScan(df, groups, bytes, WidenKey.get(name))
@@ -103,41 +114,52 @@ package object queries {
     "nation" -> "n_nationkey",
     "region" -> "r_regionkey")
 
-  private val footerCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), (Int, Long)]()
+  /** Footer facts of a parquet table: row groups and bytes (summed over
+    * the part files of a directory table) and, for a single file, its
+    * footer's file metadata — the schema and key-value metadata; the
+    * row-group list is dropped once counted. */
+  private final case class FooterMeta(rowGroups: Int, bytes: Long,
+                                      footer: Option[org.apache.parquet.hadoop.Footer])
 
-  /** A meta that never trips the widen gate — returned when the footer
+  private val footerCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), FooterMeta]()
+
+  /** A meta that never trips the widen gate — used when the footer
     * cannot be read (missing file, corrupt footer): the table is served
     * unwidened rather than failing query CONSTRUCTION. */
   private val NoWiden = (Int.MaxValue, 0L)
 
-  /** (row groups, file bytes) of a parquet table — footer-only reads,
-    * cached per (path, mtime, len) so a rewrite at the same path (test
-    * fixtures, regenerated scale dirs) is re-read. Directory-style tables
-    * (standard df.write.parquet output) sum over their part files. Any
-    * read failure degrades to [[NoWiden]] — widening is an optimization,
-    * never a correctness gate. */
-  private def parquetFooterMeta(s: SparkSession, path: String): (Int, Long) = {
+  /** [[FooterMeta]] of a parquet table — footer-only reads, cached per
+    * (path, mtime, len) so a rewrite at the same path (test fixtures,
+    * regenerated scale dirs) is re-read. Directory-style tables (standard
+    * df.write.parquet output) sum over their part files. Any read failure
+    * gives `None` — widening and the footer schema are optimizations,
+    * never correctness gates. */
+  private def parquetFooterMeta(s: SparkSession, path: String): Option[FooterMeta] = {
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.metadata.ParquetMetadata
     val conf = s.sparkContext.hadoopConfiguration
-    def footer(st: org.apache.hadoop.fs.FileStatus): Int = {
+    def read(st: org.apache.hadoop.fs.FileStatus): FooterMeta = {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRowGroups.size finally r.close()
+      val r = ParquetFileReader.open(in)
+      try FooterMeta(r.getRowGroups.size, st.getLen, Some(new Footer(st.getPath,
+        new ParquetMetadata(r.getFooter.getFileMetaData, java.util.Collections.emptyList()))))
+      finally r.close()
     }
     try {
       val hp = new org.apache.hadoop.fs.Path(path)
       val fs = hp.getFileSystem(conf)
       val st = fs.getFileStatus(hp)
-      footerCache.computeIfAbsent((path, st.getModificationTime, st.getLen), { _ =>
+      Some(footerCache.computeIfAbsent((path, st.getModificationTime, st.getLen), { _ =>
         if (st.isDirectory) {
           val parts = fs.listStatus(hp).filter { f =>
             val n = f.getPath.getName
             f.isFile && !n.startsWith("_") && !n.startsWith(".")
-          }
-          (parts.map(footer).sum, parts.map(_.getLen).sum)
-        } else (footer(st), st.getLen)
-      })
-    } catch { case scala.util.control.NonFatal(_) => NoWiden }
+          }.map(read)
+          FooterMeta(parts.map(_.rowGroups).sum, parts.map(_.bytes).sum, None)
+        } else read(st)
+      }))
+    } catch { case scala.util.control.NonFatal(_) => None }
   }
 
   /** Normalize an `events.ts` column to instant TimestampType whatever the

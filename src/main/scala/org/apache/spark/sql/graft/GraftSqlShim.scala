@@ -61,6 +61,22 @@ object GraftSqlShim {
     }
   }
 
+  /** The schema `spark.read.parquet` infers for one parquet file, taken
+    * from that file's already-read `footer` instead of a schema-inference
+    * Spark job: Spark's own `readSchemaFromFooter` (the Spark schema the
+    * writer stored, else the parquet schema converted) under the
+    * session's parquet confs (`nanosAsLong`, binary-as-string, INT96,
+    * timestamp-NTZ inference), read on every call. `None` when the session
+    * merges parquet schemas, where inference reads every file. */
+  def parquetFooterSchema(spark: SparkSession,
+                          footer: org.apache.parquet.hadoop.Footer)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.asInstanceOf[classic.SparkSession].sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled) None
+    else Some(ParquetFileFormat.readSchemaFromFooter(footer, new ParquetToSparkSchemaConverter(conf)))
+  }
+
   /** Drain the async listener bus so a QueryExecutionListener registered
     * by the caller has seen every completed execution (the bus delivers
     * on its own thread; `waitUntilEmpty` is private[spark]). Used by

@@ -76,6 +76,39 @@ class TokenizeSpec extends AnyFunSuite with SparkFixture {
     assert(per.map(_.toString).sorted.toSeq == viaWindow)
   }
 
+  test("topKPerReducer equals the window formulation when many words tie at the k-th count") {
+    // 240 words (two case spellings of 120 stems: routing lowercases, so
+    // both spellings share a reducer), count 1 + (i mod 4): every reducer
+    // holds a run of words tied at each count, so the k-th place is
+    // decided by `word asc` alone; the tokens are shuffled over 12 texts in
+    // 3 partitions, so the partial prune sees each word's partial counts
+    val words = (0 until 120).flatMap { i =>
+      val stem = s"w${('a' + i % 26).toChar}${('a' + i / 26).toChar}"
+      Seq(stem, stem.capitalize)
+    }
+    val tokens = words.zipWithIndex.flatMap { case (w, i) => Seq.fill(1 + i % 4)(w) }
+    val texts = new scala.util.Random(11).shuffle(tokens).grouped(40).map(_.mkString(" "))
+    val docs = texts.toSeq.toDF("text").repartition(3)
+    for (n <- Seq(4, 7); k <- Seq(1, 10, 20)) {
+      val got = Tokenize.topKPerReducer(docs, "text", k = k, numReducers = n)
+        .collect().map(_.toString).sorted.toSeq
+      val viaWindow = Tokenize.wordCount(docs, "text")
+        .withColumn("reducer",
+          graft.functions.EncodeWord.routeUdf(col("word"), lit(n)))
+        .withColumn("rn", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy("reducer")
+            .orderBy(desc("cnt"), asc("word"))))
+        .where(col("rn") <= k).select("reducer", "word", "cnt")
+        .collect().map(_.toString).sorted.toSeq
+      assert(got == viaWindow, s"numReducers=$n k=$k")
+      // the fixture really ties at the k-th place in some reducer
+      val perReducer = words.zipWithIndex
+        .groupBy { case (w, _) => graft.functions.EncodeWord.route(w, n) }.values
+        .map(_.map { case (_, i) => 1 + i % 4 }.sorted(Ordering[Int].reverse))
+      assert(perReducer.exists(c => c.size > k && c(k - 1) == c(k)), s"numReducers=$n k=$k")
+    }
+  }
+
   test("tokenArray preserves order for shingling") {
     val arr = Seq("a!b c.d").toDF("text")
       .select(Tokenize.tokenArray(col("text")).as("ws"))
