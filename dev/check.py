@@ -15,7 +15,7 @@ always leaves a trail (the round-4 q_kmeans mismatch had none).
 --selftest plants an intentional one-cell mismatch through the same diff
 writer and asserts the file appears with the planted values (exit 0 = ok).
 """
-import json, math, subprocess, sys
+import json, math, subprocess, sys, time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
@@ -75,6 +75,109 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
+def arrow_kind(t):
+    """decimal / float / int / other, from a pyarrow type."""
+    s = str(t)
+    if s.startswith("decimal"): return "decimal"
+    if s.startswith(("float", "double", "halffloat")): return "float"
+    if s.startswith(("int", "uint")): return "int"
+    return "other"
+
+
+def duck_kind(t):
+    """The same kinds from a DuckDB column type, as its Arrow export
+    spells it (HUGEINT leaves DuckDB as decimal128(38, 0))."""
+    s = str(t)
+    if s.startswith("DECIMAL") or s in ("HUGEINT", "UHUGEINT"): return "decimal"
+    if s in ("DOUBLE", "FLOAT", "REAL"): return "float"
+    if s in ("TINYINT", "SMALLINT", "INTEGER", "BIGINT",
+             "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT"): return "int"
+    return "other"
+
+
+def compare(con, name, sql, res_dir):
+    """Compares one query's Spark dump with its oracle result: prints the
+    verdict line, writes a forensic diff on a mismatch, returns the pass."""
+    if not res_dir.exists():
+        print(f"[MISS] {name}: no spark output"); return False
+    try:
+        spark_df = con.execute(
+            f"SELECT * FROM read_parquet('{res_dir}/*.parquet')").df()
+        # the oracle runs once: its column types come from the bound
+        # relation, which binds the query without running it
+        rel = con.sql(sql)
+        duck_types = dict(zip(rel.columns, rel.types))
+        duck_df = rel.df()
+    except Exception as e:
+        print(f"[ERR ] {name}: {e}"); return False
+
+    sc, dc = sorted(spark_df.columns), sorted(duck_df.columns)
+    if sc != dc:
+        print(f"[FAIL] {name}: columns spark={sc} duck={dc}")
+        write_diff(name, "columns", f"spark={sc} duck={dc}")
+        return False
+    # PHYSICAL-TYPE drift check (the q_smoothed_rate class): a result
+    # hash that reads the Spark parquet with pyarrow and the oracle via
+    # its own DuckDB sees the physical types, so a decimal column on one side and a double on
+    # the other hash-mismatches even when every cell compares equal.
+    # Our pandas path coerces both sides identically and hides it —
+    # so compare the raw types explicitly and fail on any
+    # decimal-vs-floating (or decimal-vs-anything-nonint) pairing.
+    try:
+        import pyarrow.parquet as pq
+        import glob as _glob
+        sp_schema = pq.ParquetDataset(
+            _glob.glob(f"{res_dir}/*.parquet")).schema
+        tbad = []
+        for cname in sc:
+            ts, td = sp_schema.field(cname).type, duck_types[cname]
+            ks, kd = arrow_kind(ts), duck_kind(td)
+            # decimal-vs-float (q_smoothed_rate) AND int-vs-float
+            # (q_mannwhitney's `/`-typed u1) both hash-differ under such
+            # a hash even when every cell compares equal under
+            # pandas coercion — any cross-kind float pairing fails
+            if ks != kd and "float" in (ks, kd):
+                tbad.append((cname, str(ts), str(td)))
+            elif ks != kd and "decimal" in (ks, kd):
+                # integral-vs-decimal hashes the same today,
+                # but a >2^53 decimal is an exactness hazard — warn
+                print(f"[warn] {name}: {cname} spark={ts} duck={td}")
+        if tbad:
+            print(f"[FAIL] {name}: type drift {tbad}")
+            write_diff(name, "types", f"decimal-vs-float drift: {tbad}")
+            return False
+    except Exception as e:
+        print(f"[warn] {name}: type check skipped: {e}")
+    s = spark_df[sc].sort_values(sc, kind="mergesort").reset_index(drop=True)
+    d = duck_df[dc].sort_values(dc, kind="mergesort").reset_index(drop=True)
+    if len(s) != len(d):
+        print(f"[FAIL] {name}: rows spark={len(s)} duck={len(d)}")
+        write_diff(name, "rows", f"spark={len(s)} duck={len(d)}", s, d)
+        return False
+    bad = []
+    for c in sc:
+        sv, dv = s[c].tolist(), d[c].tolist()
+        for i, (a, b) in enumerate(zip(sv, dv)):
+            if a == b:
+                continue
+            if isinstance(a, float) and isinstance(b, float):
+                if (math.isnan(a) and math.isnan(b)):
+                    continue
+                bad.append((c, i, a, b, abs(a - b)))
+            else:
+                bad.append((c, i, a, b, None))
+            if len(bad) > 3:
+                break
+        if len(bad) > 3:
+            break
+    if bad:
+        print(f"[FAIL] {name}: {len(s)} rows, first diffs: {bad[:3]}")
+        write_diff(name, "cells", f"first diffs: {bad[:3]}", s, d)
+        return False
+    print(f"[ok  ] {name}: {len(s)} rows")
+    return True
+
+
 def main():
     if "--selftest" in sys.argv:
         selftest()
@@ -102,97 +205,20 @@ def main():
         if Path(p).exists():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    n_pass = n_fail = 0
+    t_start = time.perf_counter()
+    runs = {}
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
             continue
-        res_dir = Path(out_dir) / name
-        if not res_dir.exists():
-            print(f"[MISS] {name}: no spark output"); n_fail += 1; continue
-        try:
-            spark_df = con.execute(
-                f"SELECT * FROM read_parquet('{res_dir}/*.parquet')").df()
-            duck_df = con.execute(sql).df()
-        except Exception as e:
-            print(f"[ERR ] {name}: {e}"); n_fail += 1; continue
-
-        sc, dc = sorted(spark_df.columns), sorted(duck_df.columns)
-        if sc != dc:
-            print(f"[FAIL] {name}: columns spark={sc} duck={dc}"); n_fail += 1
-            write_diff(name, "columns", f"spark={sc} duck={dc}")
-            continue
-        # PHYSICAL-TYPE drift check (the q_smoothed_rate class): the
-        # driver reads the Spark parquet with pyarrow and the oracle via
-        # its own DuckDB, so a decimal column on one side and a double on
-        # the other hash-mismatches even when every cell compares equal.
-        # Our pandas path coerces both sides identically and hides it —
-        # so compare the raw arrow types explicitly and fail on any
-        # decimal-vs-floating (or decimal-vs-anything-nonint) pairing.
-        try:
-            import pyarrow.parquet as pq
-            import glob as _glob
-            sp_schema = pq.ParquetDataset(
-                _glob.glob(f"{res_dir}/*.parquet")).schema
-            duck_schema = con.execute(sql).arrow().schema
-            def kind(t):
-                s = str(t)
-                if s.startswith("decimal"): return "decimal"
-                if s.startswith(("float", "double", "halffloat")): return "float"
-                if s.startswith(("int", "uint")): return "int"
-                return "other"
-            tbad = []
-            for cname in sc:
-                ks = kind(sp_schema.field(cname).type)
-                kd = kind(duck_schema.field(cname).type)
-                # decimal-vs-float (q_smoothed_rate) AND int-vs-float
-                # (q_mannwhitney's `/`-typed u1) both hash-differ at the
-                # driver even when every cell compares equal under
-                # pandas coercion — any cross-kind float pairing fails
-                if ks != kd and "float" in (ks, kd):
-                    tbad.append((cname, str(sp_schema.field(cname).type),
-                                 str(duck_schema.field(cname).type)))
-                elif ks != kd and "decimal" in (ks, kd):
-                    # integral-vs-decimal hashes fine at the driver today,
-                    # but a >2^53 decimal is an exactness hazard — warn
-                    print(f"[warn] {name}: {cname} spark="
-                          f"{sp_schema.field(cname).type} duck="
-                          f"{duck_schema.field(cname).type}")
-            if tbad:
-                print(f"[FAIL] {name}: type drift {tbad}"); n_fail += 1
-                write_diff(name, "types", f"decimal-vs-float drift: {tbad}")
-                continue
-        except Exception as e:
-            print(f"[warn] {name}: type check skipped: {e}")
-        s = spark_df[sc].sort_values(sc, kind="mergesort").reset_index(drop=True)
-        d = duck_df[dc].sort_values(dc, kind="mergesort").reset_index(drop=True)
-        if len(s) != len(d):
-            print(f"[FAIL] {name}: rows spark={len(s)} duck={len(d)}"); n_fail += 1
-            write_diff(name, "rows", f"spark={len(s)} duck={len(d)}", s, d)
-            continue
-        bad = []
-        for c in sc:
-            sv, dv = s[c].tolist(), d[c].tolist()
-            for i, (a, b) in enumerate(zip(sv, dv)):
-                if a == b:
-                    continue
-                if isinstance(a, float) and isinstance(b, float):
-                    if (math.isnan(a) and math.isnan(b)):
-                        continue
-                    bad.append((c, i, a, b, abs(a - b)))
-                else:
-                    bad.append((c, i, a, b, None))
-                if len(bad) > 3:
-                    break
-            if len(bad) > 3:
-                break
-        if bad:
-            print(f"[FAIL] {name}: {len(s)} rows, first diffs: {bad[:3]}")
-            write_diff(name, "cells", f"first diffs: {bad[:3]}", s, d)
-            n_fail += 1
-        else:
-            print(f"[ok  ] {name}: {len(s)} rows")
-            n_pass += 1
+        t0 = time.perf_counter()
+        runs[name] = (compare(con, name, sql, Path(out_dir) / name),
+                         time.perf_counter() - t0)
+    n_pass = sum(ok for ok, _ in runs.values())
+    n_fail = len(runs) - n_pass
     print(f"\n{n_pass} pass, {n_fail} fail")
+    slowest = sorted(runs.items(), key=lambda kv: -kv[1][1])[:5]
+    print(f"compare: {time.perf_counter() - t_start:.1f} s; slowest: "
+          + ", ".join(f"{n} {t:.1f} s" for n, (_, t) in slowest))
     sys.exit(1 if n_fail else 0)
 
 

@@ -17,7 +17,6 @@ object Smoke {
       .collect().foreach(r => println(s"PERREDUCER_ROW $r"))
 
     // native expression through SQL over a real scan
-    graft.plans.GraftExtensions.register(spark)
     spark.read.parquet(docs)
       .createOrReplaceTempView("documents")
     spark.sql(

@@ -20,7 +20,7 @@ object SparkEntry {
     * with count-desc/word-asc top-K (SURVEY.md §1 fine print 5 canonicalizes
     * the global merge the reference left as dead code). */
   def entry(spark: SparkSession): DataFrame = {
-    val docs = spark.read.parquet(s"${PathRoot.TestData}/sf0.001/documents.parquet")
+    val docs = table(spark, s"${PathRoot.TestData}/sf0.001", "documents")
     Tokenize.wordCount(docs, "text").orderBy(desc("cnt"), asc("word")).limit(20)
   }
 

@@ -95,6 +95,7 @@ case class HllRegisterAgg(
 object HllRegisterAgg {
   /** Column API: `hll_register_agg(col)` as an aggregate Column. */
   def apply(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function("hll_register_agg",
-      c.cast("string"))
+    org.apache.spark.sql.graft.GraftSqlShim.applyExpr(c.cast("string")) {
+      case Seq(k) => HllRegisterAgg(k).toAggregateExpression()
+    }
 }

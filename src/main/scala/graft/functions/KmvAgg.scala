@@ -112,5 +112,7 @@ case class KmvAgg(
 object KmvAgg {
   /** Column API: `kmv_agg(col)` as an aggregate Column (k = 64). */
   def apply(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function("kmv_agg", c.cast("string"))
+    org.apache.spark.sql.graft.GraftSqlShim.applyExpr(c.cast("string")) {
+      case Seq(k) => KmvAgg(k).toAggregateExpression()
+    }
 }

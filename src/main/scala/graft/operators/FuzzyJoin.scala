@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlShim
+import graft.plans.LevWithinExpression
 
 /** Blocked fuzzy (edit-distance) matching: candidates → verify, never
   * all-pairs.
@@ -62,11 +64,11 @@ object FuzzyJoin {
   def matchPairs(words: DataFrame, wordCol: String, maxDist: Int = 2): DataFrame = {
     require(maxDist >= 1 && maxDist <= 2,
       s"deletion neighborhood is built to depth 2; got maxDist=$maxDist")
-    graft.plans.GraftExtensions.register(words.sparkSession)
     candidatePairs(words, wordCol)
       .withColumn("dist",
-        call_function("lev_within", col("w1"), col("w2"), lit(maxDist))
-          .cast("long"))
+        GraftSqlShim.applyExpr(col("w1"), col("w2")) {
+          case Seq(a, b) => LevWithinExpression(a, b, maxDist)
+        }.cast("long"))
       .where(col("dist") <= maxDist)
   }
 }

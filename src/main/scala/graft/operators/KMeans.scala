@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlShim
+import graft.plans.IntVecSqDistExpression
 import graft.operators.Ckpt._
 
 /** Fixed-iteration Lloyd's k-means over integer-quantized embedding
@@ -80,7 +82,9 @@ object KMeans {
   def assign(q1000: DataFrame, cents: DataFrame): DataFrame =
     q1000.crossJoin(broadcast(cents))
       .select(col("id"), col("cid"),
-        expr("ivec_sqdist(v, c1000)").as("d2"))
+        GraftSqlShim.applyExpr(col("v"), col("c1000")) {
+          case Seq(v, c) => IntVecSqDistExpression(v, c)
+        }.as("d2"))
       .groupBy("id")
       .agg(min(struct(col("d2"), col("cid"))).as("m"))
       .select(col("id"), col("m.cid").as("cid"), col("m.d2").as("d2"))

@@ -26,13 +26,9 @@ object PageRank {
     * the hint must be CONDITIONAL: past this many vertices the iteration
     * falls back to the standard shuffled join instead of OOMing the driver.
     * Default ≈ a few hundred MB of (long, double) rows — comfortably inside
-    * executor/driver memory on any real cluster; override per session with
-    * `spark.conf.set("graft.pagerank.broadcastMaxVerts", n)`. */
+    * executor/driver memory on any real cluster; [[run]] and
+    * [[runPersonalized]] take another cap as `broadcastMaxVerts`. */
   val DefaultBroadcastMaxVerts = 10_000_000L
-
-  private def confMaxVerts(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("graft.pagerank.broadcastMaxVerts")
-      .map(_.toLong).getOrElse(DefaultBroadcastMaxVerts)
 
   /** One damped-update iteration, pre-checkpoint (exposed for plan tests).
     * When `useBroadcast`, ranks/contrib are |V|-row tables broadcast to the
@@ -81,8 +77,8 @@ object PageRank {
     * [[run]]; a vertex unreachable from the seeds keeps rank 0 (not the
     * uniform 0.15) — that asymmetry is the point of personalization.
     * @return (v, s, r): seed flag and rank after `iters` iterations. */
-  def runPersonalized(edges0: DataFrame, iters: Int,
-                      seeds: DataFrame): DataFrame = {
+  def runPersonalized(edges0: DataFrame, iters: Int, seeds: DataFrame,
+                      broadcastMaxVerts: Long = DefaultBroadcastMaxVerts): DataFrame = {
     require(iters >= 1 && iters <= 20, s"iters must be in [1, 20], got $iters")
     val edges = edges0.select(col("src"), col("dst")).ckpt()
     val degEdges = edges
@@ -94,7 +90,7 @@ object PageRank {
         Seq("v"), "left_outer")
       .select(col("v"), coalesce(col("__s"), lit(0L)).as("s"))
       .ckpt()
-    val useBroadcast = verts.count() <= confMaxVerts(edges0)
+    val useBroadcast = verts.count() <= broadcastMaxVerts
     var ranks = verts.select(col("v"), col("s"), col("s").cast("double").as("r"))
     var done = 0
     Ckpt.noAqe(edges0.sparkSession) {
@@ -122,8 +118,11 @@ object PageRank {
 
   /** @param edges0 (src, dst) BIGINT pairs, already in the direction(s)
     *   mass should flow (pass both directions for an undirected graph).
+    * @param broadcastMaxVerts broadcast the rank table only up to this |V|
+    *   ([[DefaultBroadcastMaxVerts]]).
     * @return (v, r) ranks after `iters` damped iterations (d = 0.85). */
-  def run(edges0: DataFrame, iters: Int): DataFrame = {
+  def run(edges0: DataFrame, iters: Int,
+          broadcastMaxVerts: Long = DefaultBroadcastMaxVerts): DataFrame = {
     require(iters >= 1 && iters <= 20, s"iters must be in [1, 20], got $iters")
     // edges feed every iteration, so they checkpoint once up front; rank
     // frames feed ONLY the next step, so steps fuse into one plan per
@@ -139,7 +138,7 @@ object PageRank {
       .distinct().ckpt()
     // |V| is known exactly (verts is checkpointed — the count is one cheap
     // scan, amortized over every iteration); gate the broadcast hint on it
-    val useBroadcast = verts.count() <= confMaxVerts(edges0)
+    val useBroadcast = verts.count() <= broadcastMaxVerts
     var ranks = verts.withColumn("r", lit(1.0))
     var done = 0
     // noAqe: the loop consumes only checkpointed frames with measured

@@ -44,11 +44,13 @@ object Tokenize {
 
   /** The keep rule as a native predicate ([[graft.plans.KeepToken]]):
     * `lower(word) RLIKE KeepRegex`, decided by the tokenizer kernel. */
-  def keep(word: Column): Column = GraftSqlShim.applyExpr(word)(KeepToken(_))
+  def keep(word: Column): Column =
+    GraftSqlShim.applyExpr(word) { case Seq(w) => KeepToken(w) }
 
   /** The kept tokens of `text`, in order ([[graft.plans.KeptTokens]]):
     * `split(text, Delim)` filtered by [[keep]], in one scan. */
-  def keptTokens(text: Column): Column = GraftSqlShim.applyExpr(text)(KeptTokens(_))
+  def keptTokens(text: Column): Column =
+    GraftSqlShim.applyExpr(text) { case Seq(t) => KeptTokens(t) }
 
   /** One output row per kept token; original spelling preserved. */
   def tokenize(df: DataFrame, textCol: String, out: String = "word"): DataFrame =

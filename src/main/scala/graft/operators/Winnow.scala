@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlShim
+import graft.plans.WinnowGenerator
 
 /** Winnowing fingerprint selection (Schleimer/Wilkerson/Aiken, SIGMOD'03 —
   * the MOSS algorithm): hash every character k-gram, slide a w-window over
@@ -38,9 +40,8 @@ object Winnow {
   def selected(df: DataFrame, idCol: String, textCol: String,
                k: Int, w: Int): DataFrame = {
     require(k >= 1 && w >= 1, s"k=$k w=$w must be positive")
-    graft.plans.GraftExtensions.register(df.sparkSession)
     df.where(length(col(textCol)) >= k + w - 1)
       .select(col(idCol),
-        call_function("winnow_fingerprints", col(textCol), lit(k), lit(w)))
+        GraftSqlShim.applyExpr(col(textCol)) { case Seq(t) => WinnowGenerator(t, k, w) })
   }
 }

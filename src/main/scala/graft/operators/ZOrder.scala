@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{call_function, col}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.GraftSqlShim
+import graft.plans.InterleaveBitsExpression
 
 /** Z-order (Morton-curve) file layout: range-partition + sort by the
   * interleaved bits of two columns so every file's min/max envelope is a
@@ -16,8 +18,9 @@ import org.apache.spark.sql.functions.{call_function, col}
 object ZOrder {
 
   /** The Z value of two int columns (low 16 bits each) — the native
-    * codegen'd `interleave_bits` expression registered by GraftExtensions. */
-  def zCol(x: Column, y: Column): Column = call_function("interleave_bits", x, y)
+    * codegen'd [[InterleaveBitsExpression]] (`interleave_bits` in SQL). */
+  def zCol(x: Column, y: Column): Column =
+    GraftSqlShim.applyExpr(x, y) { case Seq(a, b) => InterleaveBitsExpression(a, b) }
 
   /** Rewrite `df` into `nFiles` files clustered by z(x, y). The z column
     * drives repartitionByRange + in-partition sort, then is dropped —

@@ -207,9 +207,9 @@ object TokenCountsExec {
   }
 }
 
-/** Plans [[TokenCounts]] as [[TokenCountsExec]]. Registered through
-  * `GraftExtensions`, and on any other session by `Tokenize.wordCount` and
-  * `GraftExtensions.register` (`spark.experimental.extraStrategies`). */
+/** Plans [[TokenCounts]] as [[TokenCountsExec]]. Injected by
+  * `GraftExtensions`, and on any other session by `Tokenize.wordCount`
+  * (`spark.experimental.extraStrategies`). */
 object TokenCountsStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TokenCounts(text, output, child) => TokenCountsExec(text, output, planLater(child)) :: Nil

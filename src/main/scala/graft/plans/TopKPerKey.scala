@@ -38,9 +38,16 @@ case class TopKPerKey(keys: Seq[Expression], ordering: Seq[SortOrder],
 /** Physical node. `partial = true` runs before the Exchange with no
   * distribution requirement (pure map-side pruning); the final node
   * requires clustering on `keys`, which EnsureRequirements satisfies with
-  * one hash Exchange — exactly the partial/final HashAggregate shape. */
+  * one hash Exchange — exactly the partial/final HashAggregate shape.
+  *
+  * `maxKeysInMemory` is the in-memory heap-map key budget per task. The
+  * heap map is O(keys·k); past this many distinct keys, NEW keys fall back
+  * to a spillable external sort (see doExecute) instead of growing the map
+  * — the same degrade-to-sort contract HashAggregateExec honors. It is a
+  * constant, not a setting; specs pass a small one to force the fallback. */
 case class TopKPerKeyExec(keys: Seq[Expression], ordering: Seq[SortOrder],
-                          k: Int, partial: Boolean, child: SparkPlan)
+                          k: Int, partial: Boolean, child: SparkPlan,
+                          maxKeysInMemory: Int = TopKPerKeyExec.MaxKeysInMemory)
     extends UnaryExecNode {
 
   override def output: Seq[Attribute] = child.output
@@ -61,13 +68,6 @@ case class TopKPerKeyExec(keys: Seq[Expression], ordering: Seq[SortOrder],
   override def requiredChildDistribution: Seq[Distribution] =
     if (partial) Seq(UnspecifiedDistribution)
     else Seq(ClusteredDistribution(normalizedKeys))
-
-  /** In-memory heap-map key budget per task. The heap map is O(keys·k);
-    * past this many distinct keys, NEW keys fall back to a spillable
-    * external sort (see doExecute) instead of growing the map — the same
-    * degrade-to-sort contract HashAggregateExec honors. */
-  private lazy val maxKeysInMemory: Int =
-    conf.getConfString("spark.graft.topk.maxKeysInMemory", (1 << 22).toString).toInt
 
   override protected def doExecute(): RDD[InternalRow] = {
     val (ks, so, out, kk) = (normalizedKeys, ordering, child.output, k)
@@ -153,9 +153,14 @@ case class TopKPerKeyExec(keys: Seq[Expression], ordering: Seq[SortOrder],
     copy(child = newChild)
 }
 
+object TopKPerKeyExec {
+  /** Per-task in-memory key budget: 4M keys. */
+  val MaxKeysInMemory: Int = 1 << 22
+}
+
 /** Plans the logical node as partial → (Exchange via EnsureRequirements)
-  * → final. Registered through `spark.experimental.extraStrategies`
-  * (operators.TopK does this lazily) or `GraftExtensions`. */
+  * → final. Injected by `GraftExtensions`, and on any other session by
+  * `operators.TopK.perKey` (`spark.experimental.extraStrategies`). */
 object TopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerKey(keys, ordering, k, child) =>

@@ -125,7 +125,6 @@ object Geo extends Catalog {
     // InterleaveBitsExpression); the oracle unrolls the 4 xy→d rotate
     // rounds in SQL.
     "q_geo_hilbert" -> ((s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val cw = Space / HilbN
       val occ = points(s, dir)
         .select((col("px") / cw).cast("int").as("cx"),

@@ -432,7 +432,6 @@ object LlmDedup extends Catalog {
     // not just through the Column API. Output: per-doc fingerprint-set
     // size (docs with no full window emit no rows on either engine).
     "q_sql_winnow" -> ((s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       docs(s, dir).createOrReplaceTempView("documents_wv")
       s.sql(
         s"""SELECT doc_id, CAST(count(DISTINCT wm) AS BIGINT) AS n_fp

@@ -551,7 +551,6 @@ object Metrics extends Catalog {
     // ObjectHashAggregate and ONE array per partition crosses the
     // shuffle (vs the composed form's (bucket, rho) rows).
     "q_sketch_hll_native" -> ((s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val li = table(s, dir, "lineitem")
       val regs = li
         .agg(graft.functions.HllRegisterAgg(col("l_orderkey")).as("rs"))
@@ -647,7 +646,6 @@ object Metrics extends Catalog {
     // just the estimate — DuckDB reproduces the identical bottom-64 set
     // from the same md5 hash rule.
     "q_sketch_kmv" -> ((s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val li = table(s, dir, "lineitem")
       val sk = li.agg(graft.functions.KmvAgg(col("l_orderkey")).as("ks"))
         .select(expr("CAST(size(ks) AS BIGINT)").as("k"),
@@ -668,7 +666,6 @@ object Metrics extends Catalog {
     // |A∩B| ≈ ρ·est_union div k — all exact integer arithmetic over
     // two 64-long arrays. Sets: click-users vs purchase-users.
     "q_sketch_kmv_sets" -> ((s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val ev = table(s, dir, "events")
       def sk(t: String, alias: String) =
         ev.where(col("event_type") === t)

@@ -65,7 +65,6 @@ object Reference extends Catalog {
     // expression (plans.EncodeWordExpression, codegen'd) — the oracle twin
     // recomputes the digit string in pure DuckDB string SQL.
     "q_encode_exact" -> ((s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       toks(s, dir).select("word").distinct()
         .select(col("word"),
           graft.plans.GraftExtensions.encode_word(col("word")).as("enc"))
@@ -185,7 +184,6 @@ object Reference extends Catalog {
     // kernel (`kept_tokens`) included.
     "q_sql_frontend" -> ((s, dir) => {
       docs(s, dir).createOrReplaceTempView("documents_v")
-      graft.plans.GraftExtensions.register(s)
       s.sql(
         """SELECT word, count(*) AS cnt FROM (
           |  SELECT explode(kept_tokens(text)) AS word FROM documents_v

@@ -58,7 +58,6 @@ object Strings extends Catalog {
     // whole-stage pipeline. The band cap is mirrored verbatim in the
     // oracle (house rule: every blocking cap is part of the semantics).
     "q_jaro_align" -> ((s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val toks = vocab(s, dir)
       val lhs = toks.select(col("w").as("a"), length(col("w")).as("la"))
         .withColumn("lb", explode(expr(s"sequence(la - $JwBand, la + $JwBand)")))
@@ -81,7 +80,6 @@ object Strings extends Catalog {
     // (|Δlen| ≤ 2, implied by 2 edits but stated for the oracle) appears
     // in the SQL twin. The codegen'd damerau_lev verifies exactly.
     "q_damerau_typos" -> ((s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val toks = vocab(s, dir).withColumn("n", length(col("w")))
       // delete-0/1/2 variants at 0-based positions i < j
       val vars = toks.select(col("w"), explode(expr(

@@ -13,11 +13,11 @@ object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** A native catalyst expression applied to a Column (`private[sql]`
+  /** A native catalyst expression over Columns (`private[sql]`
     * `ExpressionUtils`): how the Column API reaches graft's expressions
     * without going through a registered function name. */
-  def applyExpr(arg: Column)(f: Expression => Expression): Column =
-    classic.ExpressionUtils.column(f(classic.ExpressionUtils.expression(arg)))
+  def applyExpr(args: Column*)(f: Seq[Expression] => Expression): Column =
+    classic.ExpressionUtils.column(f(args.map(classic.ExpressionUtils.expression)))
 
   /** `localCheckpoint` that TRUNCATES STATISTICS along with lineage.
     *

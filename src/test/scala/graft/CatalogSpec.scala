@@ -1,5 +1,10 @@
 package graft
 
+import graft.functions.{HllRegisterAgg, KmvAgg}
+import graft.operators.{FuzzyJoin, KMeans, Tokenize, Winnow, ZOrder}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Catalog-level invariants at sf0.001 (exact value matching against the
@@ -42,6 +47,14 @@ class CatalogSpec extends AnyFunSuite with SparkFixture {
     assert(failed.isEmpty, s"queries that failed: ${failed.mkString("; ")}")
     val empty = CatalogRun.results.collect { case (n, Right(r)) if r.rows == 0 => n }
     assert(empty.isEmpty, s"queries with empty results: $empty")
+  }
+
+  test("building every query adds no optimizer rule and no second graft strategy") {
+    CatalogRun.results
+    val x = spark.experimental
+    assert(x.extraOptimizations.isEmpty, x.extraOptimizations)
+    for (s <- Seq(graft.plans.TopKStrategy, graft.plans.TokenCountsStrategy))
+      assert(x.extraStrategies.count(_ == s) <= 1, x.extraStrategies)
   }
 
   test("q_topk is the 20-row prefix of q_wordcount's total order") {
@@ -90,13 +103,41 @@ class CatalogSpec extends AnyFunSuite with SparkFixture {
     assert(joined.where(col("n") > 1).count() == 0)
   }
 
+  /** Every Column helper over graft's native expressions, on session `s`. */
+  private def helperRows(s: SparkSession): Map[String, Seq[String]] = {
+    val words = s.createDataFrame(Seq("kitten", "sitten", "sitting", "mitten", "The", "42", "c°te")
+      .map(Tuple1(_))).toDF("w")
+    val docs = s.createDataFrame(Seq((1L, "The 42 c°te, a b."), (2L, "abcdefghijklmnop")))
+      .toDF("id", "text")
+    val vecs = s.createDataFrame(Seq((1L, Seq(1000L, 0L)), (2L, Seq(0L, 3000L)))).toDF("id", "v")
+    val cents = s.createDataFrame(Seq((0L, Seq(0L, 0L)), (1L, Seq(0L, 2000L)))).toDF("cid", "c1000")
+    Map(
+      "keep, encode_word" -> words.select(col("w"), Tokenize.keep(col("w")),
+        graft.plans.GraftExtensions.encode_word(col("w"))),
+      "keptTokens" -> docs.select(col("id"), Tokenize.keptTokens(col("text"))),
+      "matchPairs" -> FuzzyJoin.matchPairs(words, "w"),
+      "Winnow.selected" -> Winnow.selected(docs, "id", "text", k = 3, w = 2),
+      "zCol" -> s.createDataFrame(Seq((3, 5), (65535, 1))).toDF("x", "y")
+        .select(ZOrder.zCol(col("x"), col("y"))),
+      "sketches" -> words.agg(HllRegisterAgg(col("w")), KmvAgg(col("w"))),
+      "KMeans.assign" -> KMeans.assign(vecs, cents)
+    ).map { case (k, df) => k -> df.collect().map(_.toString).toSeq.sorted }
+  }
+
+  test("Column helpers return the same rows on a session built without the extension") {
+    val bare = SparkFixture.bareSession()
+    assert(!bare.sessionState.functionRegistry.functionExists(FunctionIdentifier("lev_within")))
+    val want = helperRows(spark)
+    assert(want.values.forall(_.nonEmpty), want)
+    assert(helperRows(bare) == want)
+  }
+
   test("SQL front door: the whole native-function library is registered and callable") {
-    graft.plans.GraftExtensions.register(spark)
     val expected = Seq("encode_word", "lev_within", "interleave_bits",
       "char_shingles", "winnow_fingerprints", "ivec_dot", "ivec_sqdist")
     for (f <- expected) {
-      assert(spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(f)), s"$f not registered")
+      assert(spark.sessionState.functionRegistry.functionExists(FunctionIdentifier(f)),
+        s"$f not registered")
       // DESCRIBE FUNCTION must print a real usage string, not "N/A"
       val desc = spark.sql(s"DESCRIBE FUNCTION $f")
         .collect().map(_.getString(0)).mkString("\n")

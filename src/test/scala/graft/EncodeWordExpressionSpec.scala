@@ -9,7 +9,6 @@ class EncodeWordExpressionSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
   test("native expression matches the Scala function and the UDF") {
-    GraftExtensions.register(spark)
     val words = Seq("abc", "The", "café", "123", "`", "z", "", "a1b2") ++
       graft.operators.Tokenize
         .tokenize(spark.read.parquet(s"$Sf/documents.parquet"), "text")
@@ -29,7 +28,6 @@ class EncodeWordExpressionSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("optimizer rule strips case-normalization ABOVE encode_word only") {
-    GraftExtensions.register(spark)
     val df = spark.read.parquet(s"$Sf/documents.parquet")
     // lower(encode_word(x)) → encode_word(x): digits are case-invariant
     val stripped = df.select(expr("lower(encode_word(lang))"))
@@ -49,7 +47,6 @@ class EncodeWordExpressionSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("expression handles nulls and participates in codegen") {
-    GraftExtensions.register(spark)
     val df = Seq(Some("abc"), None).toDF("w")
     val got = df.select(expr("encode_word(w)")).as[Option[String]].collect()
     assert(got.toSet == Set(Some("010203"), None))

@@ -67,11 +67,9 @@ class GeoSpec extends AnyFunSuite with SparkFixture {
 
   test("q_geo_radius_join is partition-count invariant (exact integers)") {
     val base = rows("q_geo_radius_join").map(_.toString).toSeq
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
+    withConf("spark.sql.shuffle.partitions", "7") {
       assert(rows("q_geo_radius_join").map(_.toString).toSeq == base)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
   }
 
   test("q_geo_radius_join plan: station side broadcasts, no cartesian product") {

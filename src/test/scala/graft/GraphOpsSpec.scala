@@ -27,6 +27,11 @@ class GraphOpsSpec extends AnyFunSuite with SparkFixture {
     byRoot.values.flatMap { vs => val m = vs.min; vs.map(_ -> m) }.toMap
   }
 
+  /** HALF_UP at 8 decimals via the decimal string repr, matching Spark's
+    * round() on doubles. */
+  private def r8(x: Double): Double =
+    java.math.BigDecimal.valueOf(x).setScale(8, java.math.RoundingMode.HALF_UP).doubleValue()
+
   test("ConnectedComponents matches union-find on random graphs") {
     val rnd = new scala.util.Random(42)
     for (trial <- 1 to 8) {
@@ -50,10 +55,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkFixture {
     val got = PageRank.run(edges.toDF("src", "dst"), 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
 
-    // reference: identical per-step rounding (HALF_UP at 8 decimals via the
-    // decimal string repr, matching Spark's round() on doubles)
-    def r8(x: Double): Double =
-      java.math.BigDecimal.valueOf(x).setScale(8, java.math.RoundingMode.HALF_UP).doubleValue()
+    // reference: identical per-step rounding (r8)
     val verts = edges.flatMap(e => Seq(e._1, e._2)).distinct
     val deg = edges.groupBy(_._1).map { case (v, es) => v -> es.size }
     var r = verts.map(_ -> 1.0).toMap
@@ -80,8 +82,6 @@ class GraphOpsSpec extends AnyFunSuite with SparkFixture {
         seedSet.toSeq.toDF("v"))
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toMap
 
-    def r8(x: Double): Double =
-      java.math.BigDecimal.valueOf(x).setScale(8, java.math.RoundingMode.HALF_UP).doubleValue()
     val verts = edges.flatMap(e => Seq(e._1, e._2)).distinct
     val deg = edges.groupBy(_._1).map { case (v, es) => v -> es.size }
     def s(v: Long): Double = if (seedSet(v)) 1.0 else 0.0
@@ -156,12 +156,10 @@ class GraphOpsSpec extends AnyFunSuite with SparkFixture {
     assert(hints(useBroadcast = true).contains("strategy=broadcast"))
     assert(!hints(useBroadcast = false).contains("strategy=broadcast"))
 
-    // and run() derives the flag from graft.pagerank.broadcastMaxVerts: with
-    // the cap forced below |V|=3 the ranks are STILL bit-identical — the
+    // and run() derives the flag from its broadcastMaxVerts cap: with the
+    // cap forced below |V|=3 the ranks are STILL bit-identical — the
     // shuffled fallback changes the plan, never the result
     val expected = PageRank.run(edges, 2).collect().toSet
-    spark.conf.set("graft.pagerank.broadcastMaxVerts", "1")
-    try assert(PageRank.run(edges, 2).collect().toSet == expected)
-    finally spark.conf.unset("graft.pagerank.broadcastMaxVerts")
+    assert(PageRank.run(edges, 2, broadcastMaxVerts = 1).collect().toSet == expected)
   }
 }

@@ -30,7 +30,6 @@ class HilbertSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("codegen'd SQL path agrees with the interpreted function") {
-    graft.plans.GraftExtensions.register(spark)
     import spark.implicits._
     val rows = (0 until 32).flatMap(x => (0 until 32).map(y => (x, y)))
       .toDF("x", "y")
@@ -43,7 +42,6 @@ class HilbertSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("expression stays inside whole-stage codegen") {
-    graft.plans.GraftExtensions.register(spark)
     val p = spark.range(100)
       .selectExpr("CAST(id AS INT) AS x", "CAST(id % 7 AS INT) AS y")
       .selectExpr("hilbert_index(x, y, 16) AS d")

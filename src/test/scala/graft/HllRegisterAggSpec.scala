@@ -10,7 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class HllRegisterAggSpec extends AnyFunSuite with SparkFixture {
 
   private def nativeRegs(df: org.apache.spark.sql.DataFrame, keyCol: String) = {
-    graft.plans.GraftExtensions.register(spark)
     df.agg(graft.functions.HllRegisterAgg(col(keyCol)).as("rs"))
       .select(posexplode(col("rs")).as(Seq("bucket", "reg")))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1).toSeq
@@ -31,7 +30,6 @@ class HllRegisterAggSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("plans through ObjectHashAggregate with a partial stage") {
-    graft.plans.GraftExtensions.register(spark)
     val li = spark.read.parquet(s"$Sf/lineitem.parquet")
     val p = li.agg(graft.functions.HllRegisterAgg(col("l_orderkey")))
       .queryExecution.executedPlan.toString
@@ -40,7 +38,6 @@ class HllRegisterAggSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("null keys are ignored; empty input yields all-zero registers") {
-    graft.plans.GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq[Option[String]](None, None).toDF("k")
       .select(col("k").cast("string").as("k"))
@@ -51,7 +48,6 @@ class HllRegisterAggSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("sql front door: hll_register_agg usable from spark.sql") {
-    graft.plans.GraftExtensions.register(spark)
     spark.read.parquet(s"$Sf/lineitem.parquet")
       .createOrReplaceTempView("li_hll_native")
     val n = spark.sql(

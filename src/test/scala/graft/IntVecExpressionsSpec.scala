@@ -13,45 +13,42 @@ class IntVecExpressionsSpec extends AnyFunSuite with SparkFixture {
     rows.toDF("a", "b")
   }
 
-  test("ivec_dot equals aggregate(zip_with(*)) on randoms and edge cases") {
-    val rnd = new scala.util.Random(7)
-    val randoms = Seq.fill(50)((
-      Seq.fill(64)(java.lang.Long.valueOf(rnd.nextInt(20001) - 10000L)),
+  /** 50 pairs of random 64-long vectors. */
+  private def randoms(seed: Int) = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(50)((Seq.fill(64)(java.lang.Long.valueOf(rnd.nextInt(20001) - 10000L)),
       Seq.fill(64)(java.lang.Long.valueOf(rnd.nextInt(20001) - 10000L))))
+  }
+
+  /** Rows where `native` and `composed` differ in value or in NULL-ness. */
+  private def mismatches(d: org.apache.spark.sql.DataFrame): Long =
+    d.where(!col("native").eqNullSafe(col("composed"))).count()
+
+  test("ivec_dot equals aggregate(zip_with(*)) on randoms and edge cases") {
     val edges: Seq[(Seq[java.lang.Long], Seq[java.lang.Long])] = Seq(
       (Seq.empty, Seq.empty),                                // both empty → 0
       (Seq(java.lang.Long.valueOf(3L)), Seq.empty),          // mismatch → NULL
       (Seq(java.lang.Long.valueOf(3L), null),
         Seq(java.lang.Long.valueOf(1L), java.lang.Long.valueOf(2L))), // null elem → NULL
       (Seq(java.lang.Long.valueOf(-5L)), Seq(java.lang.Long.valueOf(7L))))
-    val d = df(randoms ++ edges).select(
+    val d = df(randoms(7) ++ edges).select(
       expr("ivec_dot(a, b)").as("native"),
       expr("aggregate(zip_with(a, b, (x, y) -> x*y), CAST(0 AS BIGINT), " +
         "(acc, v) -> acc + v)").as("composed"))
-    val bad = d.where(
-      (col("native").isNull =!= col("composed").isNull) ||
-        (col("native") =!= col("composed"))).count()
-    assert(bad == 0L)
+    assert(mismatches(d) == 0L)
     spark.catalog.clearCache()
   }
 
   test("ivec_sqdist equals the composed (x-y)^2 sum") {
-    val rnd = new scala.util.Random(11)
-    val randoms = Seq.fill(50)((
-      Seq.fill(64)(java.lang.Long.valueOf(rnd.nextInt(20001) - 10000L)),
-      Seq.fill(64)(java.lang.Long.valueOf(rnd.nextInt(20001) - 10000L))))
     val edges: Seq[(Seq[java.lang.Long], Seq[java.lang.Long])] = Seq(
       (Seq.empty, Seq.empty),
       (Seq(java.lang.Long.valueOf(3L)), Seq.empty),
       (Seq(null), Seq(java.lang.Long.valueOf(2L))))
-    val d = df(randoms ++ edges).select(
+    val d = df(randoms(11) ++ edges).select(
       expr("ivec_sqdist(a, b)").as("native"),
       expr("aggregate(zip_with(a, b, (x, y) -> (x - y) * (x - y)), " +
         "CAST(0 AS BIGINT), (acc, t) -> acc + t)").as("composed"))
-    val bad = d.where(
-      (col("native").isNull =!= col("composed").isNull) ||
-        (col("native") =!= col("composed"))).count()
-    assert(bad == 0L)
+    assert(mismatches(d) == 0L)
     spark.catalog.clearCache()
   }
 

@@ -74,15 +74,10 @@ class KMeansSpec extends AnyFunSuite with SparkFixture {
     val fn = SparkEntry.queries("q_kmeans")
     def canon(): String = fn(spark, Sf).collect()
       .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.mkString("\n")
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      val dumps = Seq(1, 3, 4, 7, 16).flatMap { p =>
-        spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-        Seq(canon(), canon())
-      }
-      assert(dumps.distinct.size == 1,
-        s"q_kmeans diverged across partitionings: ${dumps.distinct.size} variants")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    val dumps = Seq(1, 3, 4, 7, 16).flatMap(p =>
+      withConf("spark.sql.shuffle.partitions", p.toString)(Seq(canon(), canon())))
+    assert(dumps.distinct.size == 1,
+      s"q_kmeans diverged across partitionings: ${dumps.distinct.size} variants")
   }
 
   test("assignment ties break to the smaller cid") {

@@ -41,7 +41,6 @@ class KeptTokensSpec extends AnyFunSuite with SparkFixture with TokenTexts {
     }
 
   test("kept_tokens / keep_token are documented SQL functions") {
-    graft.plans.GraftExtensions.register(spark)
     for (f <- Seq("kept_tokens", "keep_token")) {
       val desc = spark.sql(s"DESCRIBE FUNCTION $f")
         .collect().map(_.getString(0)).mkString("\n")

@@ -10,7 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class KmvAggSpec extends AnyFunSuite with SparkFixture {
 
   private def sketch(df: org.apache.spark.sql.DataFrame, keyCol: String) = {
-    graft.plans.GraftExtensions.register(spark)
     df.agg(graft.functions.KmvAgg(col(keyCol)).as("ks"))
       .select(explode(col("ks")).as("h"))
       .collect().map(_.getLong(0)).toSeq
@@ -42,7 +41,6 @@ class KmvAggSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("plans through ObjectHashAggregate with a partial stage") {
-    graft.plans.GraftExtensions.register(spark)
     val li = spark.read.parquet(s"$Sf/lineitem.parquet")
     val p = li.agg(graft.functions.KmvAgg(col("l_orderkey")))
       .queryExecution.executedPlan.toString

@@ -55,10 +55,6 @@ class LinkAnfSpec extends AnyFunSuite with SparkFixture {
     def run() = SparkEntry.queries("q_hyperanf")(spark, Sf)
       .collect().map(_.toString).toSeq
     val base = run()
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
-      assert(run() == base)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    withConf("spark.sql.shuffle.partitions", "7")(assert(run() == base))
   }
 }

@@ -92,11 +92,7 @@ class MetricsSpec extends AnyFunSuite with SparkFixture {
       .collect().map(_.toString).toSeq
     val base = run()
     assert(base.length == 10)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
-      assert(run() == base)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    withConf("spark.sql.shuffle.partitions", "7")(assert(run() == base))
   }
 
   test("q_theil_sen: pair count is C(days, 2)") {
@@ -112,10 +108,6 @@ class MetricsSpec extends AnyFunSuite with SparkFixture {
     val base = run()
     val q = one("q_modularity").getAs[Double]("modularity")
     assert(q >= -1.0 && q <= 1.0, q)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
-      assert(run() == base)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    withConf("spark.sql.shuffle.partitions", "7")(assert(run() == base))
   }
 }

@@ -108,11 +108,9 @@ class RetrievalSpec extends AnyFunSuite with SparkFixture {
 
   test("q_ndcg is partition-count invariant (exact integer metrics)") {
     val base = rows("q_ndcg").map(_.toString).toSeq
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
+    withConf("spark.sql.shuffle.partitions", "7") {
       assert(rows("q_ndcg").map(_.toString).toSeq == base)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
   }
 
   test("per-query rankings plan as the native bounded-heap TopKPerKeyExec") {

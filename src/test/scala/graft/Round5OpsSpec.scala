@@ -43,12 +43,10 @@ class Round5OpsSpec extends AnyFunSuite with SparkFixture {
     // the bin rule rides the UNIQUE (n_tok, doc_id) rank — re-partitioning
     // must not move any doc across bins (ties carry the doc_id tiebreak)
     val a = SparkEntry.queries("q_bin_equidepth")(spark, Sf).collect().toSeq
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "13")
+    withConf("spark.sql.shuffle.partitions", "13") {
       val b = SparkEntry.queries("q_bin_equidepth")(spark, Sf).collect().toSeq
       assert(a == b)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
   }
 
   test("bpe_merges: 3 steps with non-increasing weights and real pairs") {
@@ -119,13 +117,11 @@ class Round5OpsSpec extends AnyFunSuite with SparkFixture {
     rows.groupBy(_._2).foreach { case (_, g) =>
       assert(g.map(_._3).sorted.toSeq == (1L to g.length)) // contiguous pos
     }
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
+    withConf("spark.sql.shuffle.partitions", "7") {
       val again = SparkEntry.queries("q_shuffle_shards")(spark, Sf).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       assert(rows.toSeq == again.toSeq)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
   }
 
   test("pipeline_assemble: exact mixture ratio and contiguous per-shard bins") {

@@ -133,12 +133,10 @@ class Round5bOpsSpec extends AnyFunSuite with SparkFixture {
 
   test("sketch_quantile: identical under different partitioning") {
     val a = SparkEntry.queries("q_sketch_quantile")(spark, Sf).collect().toSeq
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "13")
+    withConf("spark.sql.shuffle.partitions", "13") {
       val b = SparkEntry.queries("q_sketch_quantile")(spark, Sf).collect().toSeq
       assert(a == b)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
   }
 
   test("prefix_join: lossless — equals the brute-force all-pairs result") {

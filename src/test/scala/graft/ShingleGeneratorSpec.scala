@@ -13,7 +13,6 @@ class ShingleGeneratorSpec extends AnyFunSuite with SparkFixture {
 
   test("char_shingles equals the HOF spelling on edge-case strings") {
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     val texts = Seq("abcdefghij", "abcdefghijk", "short", "", "exactly8",
       "abcdefghijklmnopqrstuvwxyz")
     val df = texts.toDF("text")
@@ -32,7 +31,6 @@ class ShingleGeneratorSpec extends AnyFunSuite with SparkFixture {
 
   test("null input emits no rows") {
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     val df = Seq(Some("abcdefghij"), None).toDF("text")
     val n = df.selectExpr("char_shingles(text, 8, 3)").count()
     assert(n == 1) // only the 10-char string emits (one shingle at i=0)

@@ -198,152 +198,132 @@ class StreamOpsSpec extends AnyFunSuite with SparkFixture {
 
   test("sessionizeTws (timers) emits exactly the sessions of the old API") {
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val base = 60
-    // watermarkDelay (30 min) > gap (10 min) makes the STRAGGLER branch
-    // reachable: batch 2's t = base−20 is above the watermark (base−30)
-    // but older than start−gap — both implementations must emit it as a
-    // closed singleton and keep the open session untouched
-    val batches = Seq(
-      Seq(Event(1, ts(base), 1, "click", 1.0),
-        Event(2, ts(base + 5), 1, "view", 2.0),
-        Event(10, ts(base + 2), 2, "click", 4.0)),
-      Seq(Event(6, ts(base - 20), 1, "view", 5.0)),
-      Seq(Event(3, ts(base + 60), 2, "click", 7.0)),
-      Seq(Event(4, ts(base + 120), 3, "click", 1.0)),
-      Seq(Event(5, ts(base + 200), 3, "view", 9.0)))
-    def run(f: org.apache.spark.sql.Dataset[Event] => org.apache.spark.sql.Dataset[graft.streaming.Session],
-            name: String): Set[graft.streaming.Session] = {
-      val in = MemoryStream[Event]
-      val q = f(in.toDS()).writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        batches.foreach { b => in.addData(b); q.processAllAvailable() }
-        spark.table(name).as[graft.streaming.Session].collect().toSet
-      } finally q.stop()
-    }
-    try {
-      val old = run(StreamOps.sessionize(_, gapMs = 10 * 60000L,
-        watermarkDelay = "30 minutes"), "sess_old")
-      val tws = run(StreamOps.sessionizeTws(_, gapMs = 10 * 60000L,
-        watermarkDelay = "30 minutes"), "sess_tws")
-      assert(old.nonEmpty, "fixture closed no sessions")
-      // the straggler singleton really was exercised
-      assert(old.exists(s => s.user_id == 1 && s.n_events == 1 &&
-        s.start_ms == (base - 20) * 60000L), s"straggler missing: $old")
-      assert(tws == old, s"tws=$tws old=$old")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
+    withConf("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      val base = 60
+      // watermarkDelay (30 min) > gap (10 min) makes the STRAGGLER branch
+      // reachable: batch 2's t = base−20 is above the watermark (base−30)
+      // but older than start−gap — both implementations must emit it as a
+      // closed singleton and keep the open session untouched
+      val batches = Seq(
+        Seq(Event(1, ts(base), 1, "click", 1.0),
+          Event(2, ts(base + 5), 1, "view", 2.0),
+          Event(10, ts(base + 2), 2, "click", 4.0)),
+        Seq(Event(6, ts(base - 20), 1, "view", 5.0)),
+        Seq(Event(3, ts(base + 60), 2, "click", 7.0)),
+        Seq(Event(4, ts(base + 120), 3, "click", 1.0)),
+        Seq(Event(5, ts(base + 200), 3, "view", 9.0)))
+      def run(f: org.apache.spark.sql.Dataset[Event] => org.apache.spark.sql.Dataset[graft.streaming.Session],
+              name: String): Set[graft.streaming.Session] = {
+        val in = MemoryStream[Event]
+        val q = f(in.toDS()).writeStream.format("memory").queryName(name)
+          .outputMode(OutputMode.Append()).start()
+        try {
+          batches.foreach { b => in.addData(b); q.processAllAvailable() }
+          spark.table(name).as[graft.streaming.Session].collect().toSet
+        } finally q.stop()
       }
-      spark.sql("DROP TABLE IF EXISTS sess_old")
-      spark.sql("DROP TABLE IF EXISTS sess_tws")
+      try {
+        val old = run(StreamOps.sessionize(_, gapMs = 10 * 60000L,
+          watermarkDelay = "30 minutes"), "sess_old")
+        val tws = run(StreamOps.sessionizeTws(_, gapMs = 10 * 60000L,
+          watermarkDelay = "30 minutes"), "sess_tws")
+        assert(old.nonEmpty, "fixture closed no sessions")
+        // the straggler singleton really was exercised
+        assert(old.exists(s => s.user_id == 1 && s.n_events == 1 &&
+          s.start_ms == (base - 20) * 60000L), s"straggler missing: $old")
+        assert(tws == old, s"tws=$tws old=$old")
+      } finally {
+        spark.sql("DROP TABLE IF EXISTS sess_old")
+        spark.sql("DROP TABLE IF EXISTS sess_tws")
+      }
     }
   }
 
   test("recentEvents (ListState): newest-k buffer per user, bounded state") {
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[Event]
-    val q = StreamOps.recentEvents(in.toDS(), k = 3)
-      .writeStream.format("memory").queryName("recent_ev")
-      .outputMode("update").start()
-    try {
-      in.addData(Event(1, ts(1), 1, "a", 0.0), Event(2, ts(2), 1, "a", 0.0))
-      q.processAllAvailable()
-      in.addData(Event(3, ts(3), 1, "a", 0.0), Event(4, ts(4), 1, "a", 0.0))
-      q.processAllAvailable()
-      val got = spark.table("recent_ev")
-        .as[graft.streaming.RecentWindow].collect()
-        .map(w => w.event_ids).toSeq
-      // batch 1 window = [1,2]; batch 2 truncates to the newest 3 = [2,3,4]
-      assert(got.contains(Seq(1L, 2L)) && got.contains(Seq(2L, 3L, 4L)),
-        got.toString)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
+    withConf("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      val in = MemoryStream[Event]
+      val q = StreamOps.recentEvents(in.toDS(), k = 3)
+        .writeStream.format("memory").queryName("recent_ev")
+        .outputMode("update").start()
+      try {
+        in.addData(Event(1, ts(1), 1, "a", 0.0), Event(2, ts(2), 1, "a", 0.0))
+        q.processAllAvailable()
+        in.addData(Event(3, ts(3), 1, "a", 0.0), Event(4, ts(4), 1, "a", 0.0))
+        q.processAllAvailable()
+        val got = spark.table("recent_ev")
+          .as[graft.streaming.RecentWindow].collect()
+          .map(w => w.event_ids).toSeq
+        // batch 1 window = [1,2]; batch 2 truncates to the newest 3 = [2,3,4]
+        assert(got.contains(Seq(1L, 2L)) && got.contains(Seq(2L, 3L, 4L)),
+          got.toString)
+      } finally {
+        q.stop()
+        spark.sql("DROP TABLE IF EXISTS recent_ev")
       }
-      spark.sql("DROP TABLE IF EXISTS recent_ev")
     }
   }
 
   test("typeCounts (MapState): cumulative per-type counts per user") {
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[Event]
-    val q = StreamOps.typeCounts(in.toDS())
-      .writeStream.format("memory").queryName("type_counts")
-      .outputMode("update").start()
-    try {
-      in.addData(Event(1, ts(1), 1, "click", 0.0), Event(2, ts(2), 1, "click", 0.0),
-        Event(3, ts(3), 1, "view", 0.0), Event(4, ts(4), 2, "view", 0.0))
-      q.processAllAvailable()
-      in.addData(Event(5, ts(5), 1, "click", 0.0), Event(6, ts(6), 2, "view", 0.0))
-      q.processAllAvailable()
-      val got = spark.table("type_counts")
-        .as[graft.streaming.TypeCount].collect()
-        .groupBy(t => (t.user_id, t.event_type)).view
-        .mapValues(_.map(_.n).sorted.toSeq).toMap
-      // batch 1: (1,click)=2, (1,view)=1, (2,view)=1; batch 2 updates
-      // (1,click)=3 and (2,view)=2
-      assert(got((1L, "click")) == Seq(2L, 3L), got.toString)
-      assert(got((1L, "view")) == Seq(1L), got.toString)
-      assert(got((2L, "view")) == Seq(1L, 2L), got.toString)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
+    withConf("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      val in = MemoryStream[Event]
+      val q = StreamOps.typeCounts(in.toDS())
+        .writeStream.format("memory").queryName("type_counts")
+        .outputMode("update").start()
+      try {
+        in.addData(Event(1, ts(1), 1, "click", 0.0), Event(2, ts(2), 1, "click", 0.0),
+          Event(3, ts(3), 1, "view", 0.0), Event(4, ts(4), 2, "view", 0.0))
+        q.processAllAvailable()
+        in.addData(Event(5, ts(5), 1, "click", 0.0), Event(6, ts(6), 2, "view", 0.0))
+        q.processAllAvailable()
+        val got = spark.table("type_counts")
+          .as[graft.streaming.TypeCount].collect()
+          .groupBy(t => (t.user_id, t.event_type)).view
+          .mapValues(_.map(_.n).sorted.toSeq).toMap
+        // batch 1: (1,click)=2, (1,view)=1, (2,view)=1; batch 2 updates
+        // (1,click)=3 and (2,view)=2
+        assert(got((1L, "click")) == Seq(2L, 3L), got.toString)
+        assert(got((1L, "view")) == Seq(1L), got.toString)
+        assert(got((2L, "view")) == Seq(1L, 2L), got.toString)
+      } finally {
+        q.stop()
+        spark.sql("DROP TABLE IF EXISTS type_counts")
       }
-      spark.sql("DROP TABLE IF EXISTS type_counts")
     }
   }
 
   test("dedupCounts (transformWithState): cumulative duplicate accounting per key") {
     implicit val sqlCtx = spark.sqlContext
     // transformWithState requires the RocksDB state store provider
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[String]
-    val q = StreamOps.dedupCounts(in.toDS())
-      .writeStream.format("memory").queryName("dedup_counts")
-      .outputMode("update").start()
-    try {
-      in.addData("a", "a", "b")
-      q.processAllAvailable()
-      in.addData("a", "b", "b")
-      q.processAllAvailable()
-      val got = spark.table("dedup_counts")
-        .as[(String, Long)].collect().groupBy(_._1).view
-        .mapValues(_.map(_._2).sorted.toSeq).toMap
-      // batch 1 emits cumulative (a,2),(b,1); batch 2 emits (a,3),(b,3)
-      assert(got("a") == Seq(2L, 3L), got.toString)
-      assert(got("b") == Seq(1L, 3L), got.toString)
-      // first-seen rows are exactly the n==1 emissions (dedup view)
-      val firstSeen = spark.table("dedup_counts")
-        .as[(String, Long)].collect().filter(_._2 == 1L).map(_._1)
-      assert(firstSeen.toSeq == Seq("b"))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
+    withConf("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      val in = MemoryStream[String]
+      val q = StreamOps.dedupCounts(in.toDS())
+        .writeStream.format("memory").queryName("dedup_counts")
+        .outputMode("update").start()
+      try {
+        in.addData("a", "a", "b")
+        q.processAllAvailable()
+        in.addData("a", "b", "b")
+        q.processAllAvailable()
+        val got = spark.table("dedup_counts")
+          .as[(String, Long)].collect().groupBy(_._1).view
+          .mapValues(_.map(_._2).sorted.toSeq).toMap
+        // batch 1 emits cumulative (a,2),(b,1); batch 2 emits (a,3),(b,3)
+        assert(got("a") == Seq(2L, 3L), got.toString)
+        assert(got("b") == Seq(1L, 3L), got.toString)
+        // first-seen rows are exactly the n==1 emissions (dedup view)
+        val firstSeen = spark.table("dedup_counts")
+          .as[(String, Long)].collect().filter(_._2 == 1L).map(_._1)
+        assert(firstSeen.toSeq == Seq("b"))
+      } finally {
+        q.stop()
+        spark.sql("DROP TABLE IF EXISTS dedup_counts")
       }
-      spark.sql("DROP TABLE IF EXISTS dedup_counts")
     }
   }
 }

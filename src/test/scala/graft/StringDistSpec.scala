@@ -145,7 +145,6 @@ class StringDistSpec extends AnyFunSuite with SparkFixture {
   // ---- registration / codegen path ------------------------------------
 
   test("jaro_winkler and damerau_lev are callable from SQL and codegen") {
-    graft.plans.GraftExtensions.register(spark)
     val row = spark.sql(
       "SELECT jaro_winkler('martha', 'marhta') AS jw, " +
         "damerau_lev('ca', 'abc') AS dl").collect().head
@@ -158,14 +157,18 @@ class StringDistSpec extends AnyFunSuite with SparkFixture {
     assert(n.isNullAt(0) && n.isNullAt(1))
   }
 
-  test("q_jaro_align equals the brute-force vocabulary pairing at sf0.001") {
-    val got = SparkEntry.queries("q_jaro_align")(spark, Sf).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
+  /** The distinct lowercase ASCII-letter words (≥ 3 letters) of the corpus. */
+  private def vocab: Array[String] = {
     import org.apache.spark.sql.functions._
-    val vocab = spark.read.parquet(s"$Sf/documents.parquet")
+    spark.read.parquet(s"$Sf/documents.parquet")
       .select(explode(expr("regexp_extract_all(text, '[A-Za-z]+', 0)")).as("w"))
       .select(lower(col("w")).as("w")).where(length(col("w")) >= 3)
       .distinct().collect().map(_.getString(0)).sorted
+  }
+
+  test("q_jaro_align equals the brute-force vocabulary pairing at sf0.001") {
+    val got = SparkEntry.queries("q_jaro_align")(spark, Sf).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
     val want = for {
       a <- vocab; b <- vocab
       if a < b && math.abs(a.length - b.length) <= 3
@@ -179,11 +182,6 @@ class StringDistSpec extends AnyFunSuite with SparkFixture {
   test("q_damerau_typos SymSpell block loses no pair vs brute force at sf0.001") {
     val got = SparkEntry.queries("q_damerau_typos")(spark, Sf).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    import org.apache.spark.sql.functions._
-    val vocab = spark.read.parquet(s"$Sf/documents.parquet")
-      .select(explode(expr("regexp_extract_all(text, '[A-Za-z]+', 0)")).as("w"))
-      .select(lower(col("w")).as("w")).where(length(col("w")) >= 3)
-      .distinct().collect().map(_.getString(0)).sorted
     val want = for {
       a <- vocab; b <- vocab
       if a < b && math.abs(a.length - b.length) <= 2

@@ -63,8 +63,10 @@ class TableSchemaSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("building the word-count queries runs no Spark job") {
-    for (name <- Seq("q_topk", "q_topk_per_reducer", "q_wordcount")) {
-      val (df, jobs) = jobsDuring(SparkEntry.queries(name)(spark, Sf))
+    val built = Seq("q_topk", "q_topk_per_reducer", "q_wordcount")
+      .map(n => n -> jobsDuring(SparkEntry.queries(n)(spark, Sf))) :+
+      ("entry" -> jobsDuring(SparkEntry.entry(spark)))
+    for ((name, (df, jobs)) <- built) {
       assert(jobs == 0, s"$name ran $jobs Spark job(s) while being built")
       assert(df.schema.fieldNames.contains("word"), name)
     }

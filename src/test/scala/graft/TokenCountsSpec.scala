@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSessionExtensions, classic}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `Tokenize.wordCount` (per-task `TokenCountsExec` + `sum`) against the
@@ -80,15 +80,7 @@ class TokenCountsSpec extends AnyFunSuite with SparkFixture with TokenTexts
   }
 
   test("wordCount plans on a session built without spark.sql.extensions") {
-    val live = spark.asInstanceOf[classic.SparkSession]
-    // the private constructor is the only way to a second session with
-    // no extensions over this JVM's SparkContext
-    val ctor = classOf[classic.SparkSession].getDeclaredConstructors
-      .find(_.getParameterCount == 6).get
-    ctor.setAccessible(true)
-    val bare = ctor.newInstance(live.sparkContext, Some(live.sharedState), None,
-      new SparkSessionExtensions, Map.empty[String, String], Map.empty[String, String])
-      .asInstanceOf[classic.SparkSession]
+    val bare = SparkFixture.bareSession()
     assert(!bare.sessionState.functionRegistry.functionExists(FunctionIdentifier("kept_tokens")))
     assert(!bare.sessionState.planner.strategies.contains(TokenCountsStrategy))
     val docs = bare.createDataFrame(Seq(Tuple1("a b a"), Tuple1(null), Tuple1("B°a 42")))

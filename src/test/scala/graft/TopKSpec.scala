@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.TopK
+import graft.plans.TopKPerKeyExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -57,11 +58,16 @@ class TopKSpec extends AnyFunSuite with SparkFixture {
     // the heap map previously grew without bound at high key cardinality)
     val k = 3
     val expected = windowTwin(k)
-    spark.conf.set("spark.graft.topk.maxKeysInMemory", "4")
-    try {
-      assert(native(events, k) == expected)
-      assert(native(events.repartition(13), k) == expected)
-    } finally spark.conf.unset("spark.graft.topk.maxKeysInMemory")
+    def budget4(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
+      val plan = graft.operators.Ckpt.noAqe(spark)(TopK.perKey(df, Seq("user_id"),
+        Seq(("value", false), ("event_id", true)), k).select("user_id", "event_id")
+        .queryExecution.executedPlan)
+        .transform { case t: TopKPerKeyExec => t.copy(maxKeysInMemory = 4) }
+      assert(plan.collect { case t: TopKPerKeyExec => t.maxKeysInMemory } == Seq(4, 4), plan)
+      plan.executeCollect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    assert(budget4(events) == expected)
+    assert(budget4(events.repartition(13)) == expected)
   }
 
   test("plans as partial+final TopKPerKeyExec around one exchange, no sort") {

@@ -27,7 +27,6 @@ class ZOrderSpec extends AnyFunSuite with SparkFixture {
 
   test("sql expression agrees with the scala implementation") {
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     val rows = Seq((3, 5), (65535, 1), (1234, 4321)).toDF("x", "y")
       .select(col("x"), col("y"), ZOrder.zCol(col("x"), col("y")).as("z"))
       .collect()
