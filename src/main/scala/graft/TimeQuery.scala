@@ -4,7 +4,9 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.graft.GraftSqlShim
 
 /** Targeted timing for a few catalog queries (median-of-3, cold plans) —
@@ -15,7 +17,12 @@ import org.apache.spark.sql.graft.GraftSqlShim
   * Per rep it prints the wall time, how many Spark JOBS the query
   * scheduled, their summed duration (`job_ms`) and the wall time outside
   * them (`gap_ms`: planning, work between jobs, scheduling barriers — the
-  * fixed-cost picture behind the iterative-operator tuning in SCALE.md).
+  * fixed-cost picture behind the iterative-operator tuning in SCALE.md),
+  * and how many classes Spark compiled for it (`compiles`, from
+  * `CodegenMetrics`' compilation histogram, which counts generated-code
+  * cache misses) and the Janino time they took (`compile_ms`). A warm rep
+  * that still compiles is outgrowing the generated-code cache
+  * (`Sessions.CodegenCacheEntries`) or generating different code per run.
   * Then the median rep's jobs, one line each in submission order: wall
   * duration, task count, shuffle-write MB and job description — which of
   * an operator's barriers actually costs. Jobs can overlap, so `job_ms`
@@ -69,6 +76,8 @@ object TimeQuery {
         // so a previous rep's late events cannot leak into this one …
         GraftSqlShim.drainListenerBus(spark)
         jobs.clear(); stageToJob.clear()
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val compileNs0 = CodeGenerator.compileTime
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
@@ -76,12 +85,15 @@ object TimeQuery {
         // … and again before reading them, so every job of this rep landed
         GraftSqlShim.drainListenerBus(spark)
         spark.catalog.clearCache()
-        (wall, jobs.asScala.toSeq.sortBy(_._1))
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+        val compileMs = (CodeGenerator.compileTime - compileNs0) / 1000000
+        (wall, jobs.asScala.toSeq.sortBy(_._1), compiles, compileMs)
       }
-      for (((wall, js), rep) <- reps.zipWithIndex) {
+      for (((wall, js, compiles, compileMs), rep) <- reps.zipWithIndex) {
         val jobMs = js.map(_._2.ms.max(0L)).sum
         println(f"TIME_QUERY_REP $name rep=${rep + 1} wall=$wall%.2f " +
-          f"jobs=${js.size} job_ms=$jobMs gap_ms=${(wall * 1000 - jobMs).toLong}")
+          f"jobs=${js.size} job_ms=$jobMs gap_ms=${(wall * 1000 - jobMs).toLong} " +
+          s"compiles=$compiles compile_ms=$compileMs")
       }
       val walls = reps.map(_._1)
       println(f"TIME_QUERY $name median=${walls.sorted.apply(1)}%.2f " +

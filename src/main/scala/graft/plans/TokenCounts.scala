@@ -4,9 +4,12 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, BindReferences, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Sum}
+import org.apache.spark.sql.catalyst.planning.PhysicalAggregation
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.aggregate.AggUtils
 import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.array.ByteArrayMethods
@@ -18,7 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * ([[TokenKernel]]), counted per task before the shuffle. Several rows
   * per word can come out of one task (see [[TokenCountsExec]]), so a
   * `sum(cnt)` grouped by `word` downstream gives the exact counts;
-  * `Tokenize.wordCount` is that plan. */
+  * `Tokenize.wordCount` is that plan, and [[TokenCountsStrategy]] plans it
+  * with this node as the partial aggregate. */
 case class TokenCounts(text: Expression, output: Seq[Attribute], child: LogicalPlan)
     extends UnaryNode {
   override def producedAttributes: AttributeSet = AttributeSet(output)
@@ -209,9 +213,31 @@ object TokenCountsExec {
 
 /** Plans [[TokenCounts]] as [[TokenCountsExec]]. Injected by
   * `GraftExtensions`, and on any other session by `Tokenize.wordCount`
-  * (`spark.experimental.extraStrategies`). */
+  * (`spark.experimental.extraStrategies`).
+  *
+  * `TokenCountsExec` is the word count's combiner, so the `Aggregate(word,
+  * sum(cnt))` directly over it (`Tokenize.wordCount`'s shape) plans with no
+  * partial aggregate: the final node comes from Spark's own
+  * `AggUtils.planAggregateWithoutDistinct`, and `TokenCountsExec` takes the
+  * place of its partial child, emitting that child's output attributes
+  * (the `word` key and the `sum` buffer). The exchange on `word` then reads
+  * the per-task counts directly, and the final `sum` merges the rows one
+  * task emits for a word across budget flushes. Any other shape over
+  * `TokenCounts` plans the node alone. */
 object TokenCountsStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case PhysicalAggregation(Seq(word: Attribute),
+        aggs @ Seq(AggregateExpression(Sum(cnt, _), _, false, None, _)), result,
+        counts @ TokenCounts(text, Seq(w, c), child))
+        if word.semanticEquals(w) && cnt.semanticEquals(c) =>
+      AggUtils.planAggregateWithoutDistinct(Seq(word), aggs, result, planLater(counts)) match {
+        // TokenCountsExec writes (string, bigint) rows: the partial output must be that layout
+        case Seq(finalAgg) if finalAgg.children.map(_.output.map(_.dataType)) ==
+            Seq(Seq(StringType, LongType)) =>
+          val partialOutput = finalAgg.children.head.output
+          finalAgg.withNewChildren(Seq(TokenCountsExec(text, partialOutput, planLater(child)))) :: Nil
+        case _ => Nil
+      }
     case TokenCounts(text, output, child) => TokenCountsExec(text, output, planLater(child)) :: Nil
     case _ => Nil
   }

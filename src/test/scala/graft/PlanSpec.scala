@@ -43,11 +43,13 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
 
   test("q_topk: the map stage is one TokenCountsExec over the scan") {
     import org.apache.spark.sql.catalyst.expressions.{Lower, RLike, StringSplit}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Sum}
     import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, GenerateExec,
       InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec,
+      QueryStageExec}
     import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val df = SparkEntry.queries("q_topk")(spark, Sf)
     df.collect()
     def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
@@ -55,21 +57,30 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       case q: QueryStageExec => nodes(q.plan)
       case other => other.children.flatMap(nodes)
     })
-    // through the scan's row transition and its codegen span
+    // through row transitions, codegen spans and AQE's shuffle-read wrappers
     def input(p: SparkPlan): SparkPlan = p match {
-      case _: WholeStageCodegenExec | _: InputAdapter | _: ColumnarToRowExec | _: ProjectExec =>
+      case _: WholeStageCodegenExec | _: InputAdapter | _: ColumnarToRowExec | _: ProjectExec |
+           _: AQEShuffleReadExec =>
         input(p.children.head)
+      case q: QueryStageExec => input(q.plan)
       case other => other
     }
     val all = nodes(df.queryExecution.executedPlan)
     val counts = all.collect { case t: graft.plans.TokenCountsExec => t }
     assert(counts.size == 1, all.head)
     assert(input(counts.head.child).isInstanceOf[FileSourceScanExec], counts.head)
-    val partial = all.collect {
-      case h: HashAggregateExec if input(h.child) == counts.head => h
-    }
-    assert(partial.size == 1 && partial.head.aggregateExpressions.forall(_.mode == Partial),
-      all.head)
+    // TokenCountsExec is the combiner: the exchange reads it directly …
+    val exchange = all.collect { case e: ShuffleExchangeExec if input(e.child) eq counts.head => e }
+    assert(exchange.size == 1, all.head)
+    assert(!all.exists {
+      case h: HashAggregateExec => input(h.child) eq counts.head
+      case _ => false
+    }, all.head)
+    // … and one Final-mode sum merges its rows
+    val finals = all.collect { case h: HashAggregateExec if input(h.child) eq exchange.head => h }
+    assert(finals.size == 1, all.head)
+    assert(finals.head.aggregateExpressions.map(a => (a.mode, a.aggregateFunction.getClass)) ==
+      Seq((Final, classOf[Sum])), finals.head)
     assert(!all.exists(_.isInstanceOf[GenerateExec]), all.head)
     val regexPath = all.flatMap(_.expressions.flatMap(_.collect {
       case e @ (_: RLike | _: StringSplit | _: Lower) => e

@@ -14,6 +14,7 @@ class SessionRecipeSpec extends AnyFunSuite with SparkFixture {
   test("the test session carries the shipped recipe at width 4") {
     val c = spark.conf
     assert(c.get("spark.sql.files.openCostInBytes") == "65536")
+    assert(c.get("spark.sql.codegen.cache.maxEntries") == "1000")
     assert(c.get("spark.sql.session.timeZone") == "UTC")
     assert(c.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(c.get("spark.sql.extensions").contains("graft.plans.GraftExtensions"))

@@ -86,6 +86,22 @@ class Wave7OpsSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("betweenness: a second build and collect compiles no new class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // every class a warm run generates is still in the codegen cache
+    // (Sessions.CodegenCacheEntries); at Spark's default 100 the second run
+    // recompiled ~80 of its ~114 classes
+    def run(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      SparkEntry.queries("q_betweenness")(spark, Sf).collect()
+      spark.catalog.clearCache()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    run()
+    val compiles = run()
+    assert(compiles == 0, s"the second run compiled $compiles classes")
+  }
+
   test("sprt: walk conservation — the decision day's cumulative obs " +
     "never exceeds the total, and the decision matches the walk sign") {
     val rows = SparkEntry.queries("q_sprt")(spark, Sf).collect()
